@@ -5,33 +5,46 @@ Mechanism (SURVEY §3.2 stage 2/6):
 - The input is bucketed by ``pmod(xxhash64(conv_id), n_buckets)`` — a
   *stable* partition id, independent of file layout, so a resumed run
   sees the same buckets whatever the cluster shape.
-- After each successful bucket write, one lineage row
+- After each successful run, one lineage row per bucket written
   (partition_id, n_rows, content_hash) is appended to the manifest.
   content_hash is an order-insensitive XOR of per-row
   xxhash64(conv_id, turn_idx, extracted_text) — so a re-run can verify
   integrity, and duplicated work is detectable, not just avoidable.
-- Resume = left_anti join of the input against completed manifest
-  partition ids. The parse kernel is a pure function of `text`, so
-  re-running a bucket is idempotent by construction; output is written
-  with partitionBy(partition_id) + dynamic partition overwrite, making
-  bucket-level retries atomic-enough on a filesystem and exactly the
-  Iceberg overwrite-partition commit in production.
+- Resume reads the committed bucket ids from the manifest on the
+  driver (pyarrow; the manifest is ≤ n_buckets rows per run) and drops
+  their rows with a plain IN-filter. The parse kernel is a pure
+  function of `text`, so re-running a bucket is idempotent by
+  construction; output is written with partitionBy(partition_id) +
+  dynamic partition overwrite, making bucket-level retries
+  atomic-enough on a filesystem and exactly the Iceberg
+  overwrite-partition commit in production.
+- The commit path is sized by cluster parallelism, not by bucket
+  count: the write exchange runs ``min(n_buckets, defaultParallelism)``
+  tasks (each bucket still lands in exactly one task, so still one
+  file), and the certify re-read lists the bucket directories on at
+  most as many tasks.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["with_partition_id", "load_manifest", "completed_partitions",
-           "filter_resume", "lineage_rows", "append_manifest",
-           "run_checkpointed", "row_hash_expr"]
+__all__ = ["with_partition_id", "completed_ids", "lineage_rows",
+           "append_manifest_rows", "cluster_buckets", "run_checkpointed",
+           "row_hash_expr"]
 
-MANIFEST_SCHEMA = ("partition_id long, n_rows long, content_hash long, "
-                   "run_id string")
+MANIFEST_SCHEMA = pa.schema([("partition_id", pa.int64()),
+                             ("n_rows", pa.int64()),
+                             ("content_hash", pa.int64()),
+                             ("run_id", pa.string())])
 
 
 def with_partition_id(df: DataFrame, n_buckets: int,
@@ -41,39 +54,16 @@ def with_partition_id(df: DataFrame, n_buckets: int,
         F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("long"))
 
 
-def load_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
+def completed_ids(path: str) -> Optional[list]:
+    """Committed bucket ids, sorted (None = no manifest). Read on the
+    driver with pyarrow, the way ``append_manifest_rows`` writes it:
+    the manifest is tiny, and a Spark read of it costs three jobs
+    (listing, schema inference, collect) for no work."""
     if not os.path.exists(path):
         return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
-def completed_partitions(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    m = load_manifest(spark, path)
-    if m is None:
-        return None
-    return m.select("partition_id").distinct()
-
-
-def filter_resume(df: DataFrame, spark: SparkSession,
-                  manifest_path: str) -> DataFrame:
-    """Drop rows whose bucket is already committed (left_anti)."""
-    done = completed_partitions(spark, manifest_path)
-    if done is None:
-        return df
-    return df.join(F.broadcast(done), "partition_id", "left_anti")
-
-
-def completed_ids(spark: SparkSession, path: str) -> Optional[list]:
-    """Committed bucket ids as a driver-side list (None = no manifest).
-    Bounded by n_buckets, so always small enough to collect."""
-    m = load_manifest(spark, path)
-    if m is None:
-        return None
-    return [r.partition_id for r in m.select("partition_id").distinct()
-            .collect()]
+    ids = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
+        .to_table(columns=["partition_id"]).column(0).to_pylist()
+    return sorted(set(ids))
 
 
 ROW_HASH_COL = "row_hash"
@@ -106,10 +96,6 @@ def lineage_rows(out: DataFrame, run_id: str,
             .withColumn("run_id", F.lit(run_id)))
 
 
-def append_manifest(lineage: DataFrame, path: str) -> None:
-    lineage.write.mode("append").parquet(path)
-
-
 def append_manifest_rows(rows, path: str) -> None:
     """Driver-side manifest append (pyarrow, atomic rename). The
     manifest is tiny (≤ n_buckets rows) — a Spark job here costs
@@ -117,25 +103,45 @@ def append_manifest_rows(rows, path: str) -> None:
     is an Iceberg metadata append, i.e. also a driver-side operation."""
     if not rows:
         return
-    import os
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    table = pa.table({
-        "partition_id": pa.array([r.partition_id for r in rows],
-                                 pa.int64()),
-        "n_rows": pa.array([r.n_rows for r in rows], pa.int64()),
-        "content_hash": pa.array([r.content_hash for r in rows],
-                                 pa.int64()),
-        "run_id": pa.array([r.run_id for r in rows], pa.string()),
-    })
+    table = pa.Table.from_pylist([r.asDict() for r in rows],
+                                 schema=MANIFEST_SCHEMA)
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}.parquet")
     pq.write_table(table, tmp)
     os.rename(tmp, os.path.join(path,
                                 f"manifest-{uuid.uuid4().hex}.parquet"))
+
+
+def cluster_buckets(out: DataFrame, n_buckets: int, extra_cols=(),
+                    turn_seq: bool = False) -> DataFrame:
+    """The post-kernel composition of the bucket write: ONE exchange on
+    partition_id, ONE sort, and (``turn_seq``) the ordering window.
+
+    The exchange has ``min(n_buckets, defaultParallelism)`` partitions.
+    Hash-partitioning on partition_id still puts each bucket in exactly
+    one task, and the sort makes each task's buckets contiguous, so the
+    partitioned write emits one file per bucket — fewer tasks change
+    neither the file count nor the rows or their order inside a file.
+    A task per bucket would only add per-task fixed cost (scheduling,
+    deserialization) once n_buckets exceeds the cluster's cores.
+
+    The window runs as partitionBy(partition_id, conv_id): partition_id
+    is a pure function of conv_id, so Catalyst proves the exchange
+    satisfies the window's ClusteredDistribution (its expressions are
+    a superset of the exchange's) and the bucket sort satisfies the
+    window's ordering — no second full-payload shuffle (the measured
+    negative-scaling stage, BENCH/DIAGNOSIS_4_16.md). turn_seq is
+    unchanged: ranking within (partition_id, conv_id) == ranking within
+    conv_id."""
+    tasks = min(n_buckets,
+                out.sparkSession.sparkContext.defaultParallelism)
+    out = out.repartition(tasks, "partition_id") \
+        .sortWithinPartitions("partition_id", "conv_id", "turn_idx",
+                              *extra_cols)
+    if turn_seq:
+        w = Window.partitionBy("partition_id", "conv_id").orderBy("turn_idx")
+        out = out.withColumn("turn_seq", F.row_number().over(w))
+    return out
 
 
 def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
@@ -204,21 +210,13 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                   f"{marks[-1][1] - marks[-2][1]:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # ---- fused ordering (default): the ordering window and the
-    # bucket-clustered write want the SAME co-location — partition_id
-    # is a pure function of conv_id, so hash-partitioning by
-    # partition_id already clusters conversations. Running the window
-    # as partitionBy(partition_id, conv_id) AFTER the write
-    # repartition lets Catalyst prove the exchange satisfies the
-    # window's ClusteredDistribution (its expressions are a superset
-    # of the exchange's) and the bucket sort satisfies the window's
-    # required ordering: ONE post-kernel exchange + ONE sort instead
-    # of two of each. At 16 concurrent local writers the second
-    # full-payload shuffle was the measured negative-scaling stage
-    # (BENCH/DIAGNOSIS_4_16.md); on a real cluster it is a full extra
-    # network pass of the widest columns. turn_seq is unchanged:
-    # ranking within (partition_id, conv_id) == ranking within
-    # conv_id because conv_id determines partition_id.
+    # the certify re-read lists one directory per bucket; above the
+    # parallel-discovery threshold Spark runs that listing as a job with
+    # a task per directory — cap it at the cluster's cores
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+                   str(spark.sparkContext.defaultParallelism))
+    # fused ordering (default): the ordering window rides the bucket
+    # write's exchange and sort (see cluster_buckets)
     ek = dict(extract_kwargs or {})
     fuse_order = (transform is None
                   and cluster_write and ek.get("order", True)
@@ -227,67 +225,49 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     if fuse_order:
         ek["order"] = False
     bucketed = with_partition_id(df, n_buckets, key_col)
-    done = completed_ids(spark, manifest_path)
+    done = completed_ids(manifest_path)
     todo = bucketed
     if done:
         # resume: committed buckets are a small driver-side list
         # (≤ n_buckets) → plain IN-filter, no join, no extra scan
         todo = bucketed.filter(~F.col("partition_id").isin(done))
-        if len(set(done)) >= n_buckets:
+        if len(done) >= n_buckets:
             return []
     if max_buckets is not None:
-        undone = [b for b in range(n_buckets)
-                  if not done or b not in set(done)][:max_buckets]
+        skip = set(done or ())
+        undone = [b for b in range(n_buckets) if b not in skip][:max_buckets]
         todo = todo.filter(F.col("partition_id").isin(undone))
-    # empty-input guard runs UNCONDITIONALLY (not only on resume): a
-    # first run over zero rows must no-op, not write an empty dataset
-    # and then fail re-reading it for lineage (a scheduled incremental
-    # job with no new data would crash otherwise). isEmpty() touches
-    # one scan partition — cheap relative to the pipeline.
-    if todo.isEmpty():
-        return []
     mark("resume")
     out = (transform(todo) if transform is not None
            else extract_transcripts(todo, **ek))
     if cluster_write:
         # cluster by bucket before the partitioned write: file count
-        # becomes ~n_buckets instead of write_tasks × n_buckets, and
-        # the dynamic-overwrite commit stays O(n_buckets) as the
-        # cluster grows. sortWithinPartitions makes each bucket file
-        # (conv_id, turn_idx)-sorted — deterministic layout, ordered
-        # consumer reads, better parquet encoding. The sort is
-        # skippable (HTMLPARSER_SORT_BUCKETS=0): the write stage is
-        # memory-bandwidth-bound at high local parallelism, and the
-        # sorted layout is a consumer nicety, not a correctness
-        # requirement (lineage hashes are order-insensitive).
-        out = out.repartition(n_buckets, "partition_id")
-        if os.environ.get("HTMLPARSER_SORT_BUCKETS", "1") != "0":
-            out = out.sortWithinPartitions(
-                "partition_id", "conv_id", "turn_idx",
-                *extra_hash_cols)
-        if fuse_order:
-            from pyspark.sql import Window
-            w = (Window.partitionBy("partition_id", "conv_id")
-                 .orderBy("turn_idx"))
-            out = out.withColumn("turn_seq",
-                                 F.row_number().over(w))
+        # becomes n_buckets instead of write_tasks × n_buckets, and the
+        # dynamic-overwrite commit stays O(n_buckets) as the cluster
+        # grows. The sort makes each bucket file (conv_id, turn_idx)-
+        # sorted — deterministic layout, ordered consumer reads, better
+        # parquet encoding — and is the order the fused window needs.
+        out = cluster_buckets(out, n_buckets, extra_hash_cols,
+                              turn_seq=fuse_order)
     if lineage_mode == "hash_col":
         out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
     mark("extract+write")
     # lineage is computed from a RE-READ of what landed on disk (not
-    # from the in-memory plan) — it certifies the committed data.
-    # Column pruning keeps this pass cheap: full mode reads back the
-    # hash inputs (not raw_html); hash_col mode reads back only the
-    # 8-byte precomputed row_hash column (see docstring).
+    # from the in-memory plan) — it certifies the committed data. The
+    # schema of the frame just written is passed, so no footer/
+    # inference job runs, and a zero-row run reads back zero buckets
+    # instead of failing inference on an empty directory. Column
+    # pruning keeps this pass cheap: full mode reads back the hash
+    # inputs (not raw_html); hash_col mode reads back only the 8-byte
+    # precomputed row_hash column (see docstring).
+    written = spark.read.schema(out.schema).parquet(output_path)
     if lineage_mode == "hash_col":
-        written = spark.read.parquet(output_path) \
-            .select("partition_id", ROW_HASH_COL)
+        written = written.select("partition_id", ROW_HASH_COL)
     else:
-        written = spark.read.parquet(output_path) \
-            .select("partition_id", "conv_id", "turn_idx",
-                    *extra_hash_cols, "extracted_text")
+        written = written.select("partition_id", "conv_id", "turn_idx",
+                                 *extra_hash_cols, "extracted_text")
     if done:
         written = written.filter(~F.col("partition_id").isin(done))
     rows = lineage_rows(written, run_id,

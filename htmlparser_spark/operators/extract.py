@@ -4,8 +4,9 @@ Stage layout (SURVEY §3.2), designed for 10^12-turn scale:
 
 1. scan          — parquet/iceberg read; Catalyst prunes to the needed
                    columns (verify with .explain: ReadSchema).
-2. resume        — left_anti join against the checkpoint manifest
-                   (operators.checkpoint), skipping completed partitions.
+2. resume        — IN-filter on the committed bucket ids read from the
+                   checkpoint manifest (operators.checkpoint), skipping
+                   completed partitions.
 3. skew spread   — explicit repartition on xxhash64(conv_id, turn_idx):
                    a mega-conversation (millions of turns sharing
                    conv_id) is spread uniformly because the hash

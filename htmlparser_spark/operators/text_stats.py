@@ -263,8 +263,9 @@ _WINNOW_POSCAP = 1048576     # 2^20: gram positions encoded below this
 def winnow_fingerprints(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
                         k: int = 5, w: int = 4) -> DataFrame:
-    """Robust winnowing over character ``k``-grams of the normalized
-    text (lowercase, runs of non-[a-z0-9] collapsed to one space):
+    """Winnowing (rightmost-min tie-break) over character ``k``-grams
+    of the normalized text (lowercase, runs of non-[a-z0-9] collapsed
+    to one space):
     per sliding window of ``w`` consecutive gram hashes, select the
     RIGHTMOST minimal hash; emit the distinct selected (pos, fp)
     pairs per document.

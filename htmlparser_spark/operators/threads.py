@@ -16,7 +16,8 @@ Scale notes (10^12 turns):
   each round every unresolved node splices its ancestor's known
   prefix onto its own and adopts that ancestor's pointer, so resolved
   depth doubles per round — O(log max_depth) rounds, each ONE
-  hash-partitioned self-join on an 8-byte key. State rows carry only
+  hash-partitioned self-join on (conv, turn id): turn ids need only
+  be unique within a conversation. State rows carry only
   turn-id arrays (8 B per path element), never text; total state is
   O(sum of path lengths) = the size of the answer itself.
   localCheckpoint truncates lineage per round (same trade as
@@ -61,18 +62,27 @@ def linearize_threads(df: DataFrame, conv_col: str = "conv_id",
         F.array(F.col(id_col).cast("long")).alias("seq"),
     ).localCheckpoint()
     state = nodes
-    for _ in range(max_iterations):
-        if state.filter(F.col("anc").isNotNull()).limit(1).count() == 0:
-            break
-        # the _hit marker distinguishes "spliced through a ROOT
-        # ancestor" (anc legitimately becomes null) from "parent id
-        # references no turn" (no match — anc must stay set so the
-        # dangling reference fails loudly instead of resolving)
-        anc_state = state.select(F.col("id").alias("anc"),
+    rounds = 0
+    # convergence is checked before every round AND after the last one,
+    # so a graph that resolves in exactly max_iterations rounds passes
+    while state.filter(F.col("anc").isNotNull()).limit(1).count():
+        if rounds == max_iterations:
+            raise RuntimeError(
+                f"linearize_threads did not converge within "
+                f"{max_iterations} rounds — the turn graph has a cycle, "
+                f"a dangling parent id, or depth > 2^{max_iterations}")
+        rounds += 1
+        # turn ids need only be unique within a conversation, so every
+        # join keys on conv too. The _hit marker distinguishes "spliced
+        # through a ROOT ancestor" (anc legitimately becomes null) from
+        # "parent id references no turn" (no match — anc must stay set
+        # so the dangling reference fails loudly instead of resolving)
+        anc_state = state.select("conv",
+                                 F.col("id").alias("anc"),
                                  F.col("anc").alias("anc2"),
                                  F.col("seq").alias("seq2"),
                                  F.lit(True).alias("_hit"))
-        state = (state.join(anc_state, "anc", "left")
+        state = (state.join(anc_state, ["conv", "anc"], "left")
                  .select("conv", "id",
                          F.when(F.col("anc").isNull() | ~F.coalesce(
                              "_hit", F.lit(False)), F.col("anc"))
@@ -81,15 +91,11 @@ def linearize_threads(df: DataFrame, conv_col: str = "conv_id",
                              "_hit", F.lit(False)), F.col("seq"))
                          .otherwise(F.concat("seq", "seq2")).alias("seq"))
                  .localCheckpoint())
-    else:
-        raise RuntimeError(
-            f"linearize_threads did not converge within "
-            f"{max_iterations} rounds — the turn graph has a cycle, "
-            f"a dangling parent id, or depth > 2^{max_iterations}")
     parents = (df.filter(F.col(parent_col).isNotNull())
-               .select(F.col(parent_col).cast("long").alias("id"))
+               .select(F.col(conv_col).alias("conv"),
+                       F.col(parent_col).cast("long").alias("id"))
                .distinct())
-    leaves = state.join(parents, "id", "left_anti")
+    leaves = state.join(parents, ["conv", "id"], "left_anti")
     return leaves.select(
         F.col("conv").alias(conv_col),
         F.col("id").alias("leaf_id"),

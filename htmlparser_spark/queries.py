@@ -3271,7 +3271,7 @@ def q_prefix_dups(spark, sf_dir):
 def q_thread_paths(spark, sf_dir):
     """Branching-thread linearization (operators/threads.py:
     linearize_threads, pointer doubling — O(log depth) self-joins on
-    8-byte keys, id arrays only, text never in flight): each conv is
+    (conv, turn id), id arrays only, text never in flight): each conv is
     a 10-turn parent chain; convs 0-9 get a regenerated turn-5
     branch, and convs 0-4 a follow-up child under it, so the planted
     trees have two leaves with different depths. The oracle walks the

@@ -318,8 +318,8 @@ def test_template_line_dedup_plan_no_window(spark):
 # -- winnowing fingerprints (Schleimer et al. 2003) ----------------- #
 
 def _py_winnow(text, k=5, w=4):
-    """Independent reference replay of robust winnowing (rightmost
-    minimal gram hash per window, distinct (pos, fp) set)."""
+    """Independent reference replay of winnowing (rightmost minimal
+    gram hash per window, distinct (pos, fp) set)."""
     import re as _re
     from htmlparser_spark.operators.text_stats import (
         _WINNOW_BASE, _WINNOW_MOD, _WINNOW_POSCAP)

@@ -6,12 +6,14 @@
   and zero duplicate work (lineage counts).
 """
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
 from htmlparser_spark.htmldom import parse, to_raw_html, to_text_stripped
 from htmlparser_spark.operators.checkpoint import (
+    cluster_buckets,
     lineage_rows,
     run_checkpointed,
     with_partition_id,
@@ -88,9 +90,9 @@ def test_checkpoint_resume_idempotent(spark, tmp_path):
 
 
 def test_checkpoint_empty_input_first_run(spark, tmp_path):
-    """A FIRST run over zero rows must no-op (return []), not write an
-    empty dataset and crash re-reading it for lineage — the scheduled-
-    incremental-job-with-no-new-data case."""
+    """A FIRST run over zero rows must no-op (return [], commit
+    nothing), not crash re-reading an empty output for lineage — the
+    scheduled-incremental-job-with-no-new-data case."""
     out_dir = str(tmp_path / "out")
     man_dir = str(tmp_path / "manifest")
     df = generate_spark_df(spark, n_convs=4, n_turns=20, seed=3,
@@ -103,6 +105,27 @@ def test_checkpoint_empty_input_first_run(spark, tmp_path):
     l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
                           run_id="r1", extract_kwargs={"include_raw": False})
     assert sum(r.n_rows for r in l1) == 20
+
+
+def test_checkpoint_rerun_over_empty_buckets_keeps_output(spark, tmp_path):
+    """With more buckets than conversations some buckets never commit,
+    so a re-run after completion still runs a zero-row write into the
+    committed output: it must return [] and leave the output and the
+    manifest as they were."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = generate_spark_df(spark, n_convs=3, n_turns=12, seed=3,
+                           mega_text=False)
+    l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=16,
+                          run_id="r1", extract_kwargs={"include_raw": False})
+    assert sum(r.n_rows for r in l1) == 12 and len(l1) < 16
+    before = sorted(os.listdir(out_dir)), sorted(os.listdir(man_dir))
+    assert run_checkpointed(spark, df, out_dir, man_dir, n_buckets=16,
+                            run_id="r2",
+                            extract_kwargs={"include_raw": False}) == []
+    assert (sorted(os.listdir(out_dir)), sorted(os.listdir(man_dir))) \
+        == before
+    assert spark.read.parquet(out_dir).count() == 12
 
 
 def test_read_transcripts_json_csv_parquet(spark, tmp_path):
@@ -225,15 +248,16 @@ def test_fused_order_write_single_exchange(spark, tmp_path):
     window path's, and the post-kernel plan must contain exactly ONE
     Exchange and ONE Sort (the round-2 pipeline had two of each — the
     second full-payload shuffle was the measured negative-scaling
-    stage, BENCH/DIAGNOSIS_4_16.md)."""
+    stage, BENCH/DIAGNOSIS_4_16.md). The plan is pinned on
+    cluster_buckets, the composition run_checkpointed itself calls,
+    at more buckets than the session has cores: the exchange is sized
+    by parallelism, not by bucket count."""
     import re
-
-    from pyspark.sql import Window
 
     df = generate_spark_df(spark, n_convs=20, n_turns=300, seed=5,
                            mega_text=False)
     out_dir, man_dir = str(tmp_path / "o"), str(tmp_path / "m")
-    run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+    run_checkpointed(spark, df, out_dir, man_dir, n_buckets=16,
                      run_id="fused", extract_kwargs={"include_raw": False})
     fused = spark.read.parquet(out_dir)
     exp_df = extract_transcripts(df, include_raw=False, order=True)
@@ -241,16 +265,82 @@ def test_fused_order_write_single_exchange(spark, tmp_path):
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in fused.collect()}
     assert got == exp and len(got) == 300
 
-    # pin the plan shape on the same composition run_checkpointed builds
-    plan_df = extract_transcripts(with_partition_id(df, 4),
-                                  include_raw=False, order=False) \
-        .repartition(4, "partition_id") \
-        .sortWithinPartitions("partition_id", "conv_id", "turn_idx")
-    w = Window.partitionBy("partition_id", "conv_id").orderBy("turn_idx")
-    plan_df = plan_df.withColumn("turn_seq", F.row_number().over(w))
+    par = spark.sparkContext.defaultParallelism
+    assert par < 16
+    plan_df = cluster_buckets(
+        extract_transcripts(with_partition_id(df, 16), include_raw=False,
+                            order=False), 16, turn_seq=True)
     p = plan_df._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", p)) == 1
+    assert re.search(rf"hashpartitioning\(partition_id#\d+L?, {par}\)", p)
     assert len(re.findall(r"\bSort \[", p)) == 1
+
+
+def _stage_tasks(sc, group):
+    """Task count of every stage the jobs of ``group`` ran."""
+    st = sc.statusTracker()
+    out = []
+    for jid in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(jid).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None and info.numTasks:
+                out.append(info.numTasks)
+    return out
+
+
+def test_checkpoint_layout_sized_by_parallelism(spark, tmp_path):
+    """At more buckets than cores, a fresh run and a max_buckets
+    kill-resume pair each leave exactly one parquet file per committed
+    bucket, no stage of either runs more than defaultParallelism tasks
+    (the write stage used to run one task per bucket), and the pair's
+    manifest equals the uninterrupted run's."""
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    df = generate_spark_df(spark, n_convs=40, n_turns=240, seed=17,
+                           mega_text=False, num_partitions=par)
+
+    def run(out, man, run_id, **kw):
+        sc.setJobGroup(f"layout-{run_id}", run_id)
+        try:
+            rows = run_checkpointed(spark, df, out, man, n_buckets=16,
+                                    run_id=run_id,
+                                    extract_kwargs={"include_raw": False},
+                                    **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tasks = _stage_tasks(sc, f"layout-{run_id}")
+        assert tasks and max(tasks) <= par, (run_id, tasks)
+        return rows
+
+    def files_per_bucket(out):
+        return {d: sum(f.endswith(".parquet")
+                       for f in os.listdir(os.path.join(out, d)))
+                for d in os.listdir(out) if d.startswith("partition_id=")}
+
+    def manifest(man):
+        t = pq.read_table(man, columns=["partition_id", "n_rows",
+                                        "content_hash"])
+        return sorted(zip(*(t.column(c).to_pylist()
+                            for c in t.column_names)))
+
+    ref_out, ref_man = str(tmp_path / "ro"), str(tmp_path / "rm")
+    ref = run(ref_out, ref_man, "ref")
+    assert len(ref) > par
+    assert files_per_bucket(ref_out) == {
+        f"partition_id={r.partition_id}": 1 for r in ref}
+
+    out, man = str(tmp_path / "ko"), str(tmp_path / "km")
+    killed = run(out, man, "k1", max_buckets=6)
+    assert len(killed) == 6
+    assert files_per_bucket(out) == {
+        f"partition_id={r.partition_id}": 1 for r in killed}
+    resumed = run(out, man, "k2")
+    assert not {r.partition_id for r in killed} & \
+        {r.partition_id for r in resumed}
+    assert files_per_bucket(out) == files_per_bucket(ref_out)
+    assert manifest(man) == manifest(ref_man)
 
 
 def test_lineage_hash_col_manifest_equals_full(spark, tmp_path):

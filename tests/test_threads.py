@@ -52,6 +52,30 @@ def test_linearize_rejects_cycle_and_dangling(spark):
         linearize_threads(dangling, max_iterations=5)
 
 
+def test_linearize_turn_ids_unique_per_conversation(spark):
+    """Two conversations that both number their turns 1-3 must not
+    fan out into each other: the joins key on the conversation too
+    (keyed on the turn id alone, each leaf came out 4x)."""
+    rows = [(c, i, i - 1 if i > 1 else None)
+            for c in (1, 2) for i in (1, 2, 3)]
+    df = spark.createDataFrame(
+        rows, "conv_id long, turn_id long, parent_id long")
+    got = sorted((r.conv_id, r.leaf_id, r.depth, r.path)
+                 for r in linearize_threads(df).collect())
+    assert got == [(1, 3, 3, "1,2,3"), (2, 3, 3, "1,2,3")]
+
+
+def test_linearize_converges_in_exactly_max_iterations(spark):
+    """A 2-node chain resolves in one doubling round, so
+    max_iterations=1 must succeed, not report non-convergence."""
+    df = spark.createDataFrame(
+        [(1, 1, None), (1, 2, 1)],
+        "conv_id long, turn_id long, parent_id long")
+    got = [(r.leaf_id, r.depth, r.path)
+           for r in linearize_threads(df, max_iterations=1).collect()]
+    assert got == [(2, 2, "1,2")]
+
+
 def test_linearize_no_python(spark):
     # convergence runs driver-side counts, so build the converged
     # frame and check the final plan only
