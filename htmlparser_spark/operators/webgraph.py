@@ -1,15 +1,17 @@
 """Web-graph operators: per-page outlink rows and integer PageRank.
 
 The graph side of the crawl pipeline: ``extract_doc_links`` turns
-parsed pages into edge rows (the input to URL-frontier dedup and
-anchor-text indexing), ``pagerank`` ranks the resulting graph — the
-classic crawl-prioritization / quality-prior signal.
+pages into edge rows (the input to URL-frontier dedup and anchor-text
+indexing), ``pagerank`` ranks the resulting graph — the classic
+crawl-prioritization / quality-prior signal.
 
 Scale shape:
 
 - ``extract_doc_links`` is one map-only Arrow stage over
-  (keys, html); the per-link explosion happens Python-side inside the
-  stage, so no shuffle and no nested payloads cross Arrow.
+  (keys, html); each page goes through the one-pass
+  ``htmldom.links.extract_links_fused`` (no DOM is built) and the
+  per-link explosion happens Python-side inside the stage, so no
+  shuffle and no nested payloads cross Arrow.
 - ``pagerank`` is the standard Spark iteration: per round one hash
   join of (node, rank) onto edges by src plus one map-side-combined
   sum by dst — all shuffled rows are pairs of longs (16 B), the edge
@@ -40,8 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..htmldom.links import extract_links
-from ..htmldom.parse import parse
+from ..htmldom.links import extract_links_fused
 
 __all__ = ["extract_doc_links", "pagerank", "anchor_text_index"]
 
@@ -79,8 +80,8 @@ def extract_doc_links(df: DataFrame,
                     base = None
                 if s is None:
                     continue
-                for idx, href, absu, text, nof in extract_links(
-                        parse(s), resolve_against=base):
+                for idx, href, absu, text, nof in extract_links_fused(
+                        s, resolve_against=base):
                     rows.append((*kv, idx, href, absu, text, nof))
             out = pd.DataFrame(
                 rows, columns=keys + ["link_idx", "href", "href_abs",

@@ -165,3 +165,30 @@ def test_map_only_plans_no_exchange(spark):
                 extract_table_cells(df),
                 extract_doc_links(df, base_col="url")):
         assert "Exchange" not in explain_string(out)
+
+
+def test_extract_doc_links_matches_doc_path(spark):
+    """Every column of the Spark surface equals the Doc path. The
+    benchmark gate hashes only (keys, link_idx, href), so anchor_text,
+    nofollow and href_abs are pinned here."""
+    from htmlparser_spark.operators.webgraph import extract_doc_links
+
+    pages = [
+        (1, FULL_HEAD, "https://ex.com/a/b"),
+        (2, None, "https://ex.com/"),                  # NULL html
+        (3, "<p>no links <a name=n>here</a></p>", "https://ex.com/"),
+        (4, '<a href=/o rel="UGC NoFollow">out <a href=i>in</a>'
+            '<div>blk</div>tail</a><div><a href=#f>a<br>b</div>',
+         "https://ex.com/d/"),
+        (5, "<a href=rel/x>x</a><a href=y/>eof <b>in", None),  # NULL base
+    ]
+    df = spark.createDataFrame(pages, "doc_id long, text string, url string")
+    got = sorted(tuple(r) for r in
+                 extract_doc_links(df, text_col="text", base_col="url")
+                 .collect())
+    want = sorted((doc_id, *link) for doc_id, html, url in pages
+                  if html is not None
+                  for link in extract_links(parse(html), url))
+    assert got == want
+    assert {r[0] for r in got} == {1, 4, 5}
+    assert any(r[5] for r in got) and any(r[4] for r in got)
