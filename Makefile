@@ -10,7 +10,7 @@ test:
 	python -m pytest tests/ -x -q
 
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload chat_text --seed 1 --seconds 3
 
 scaling:
 	python bench/scaling.py

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from .constants import KIND_TAG, KIND_TEXT, VOID_TAGS
+from .constants import KIND_TAG, VOID_TAGS
 from .parse import Doc
 
 __all__ = ["make_node", "append", "walk"]

@@ -61,9 +61,6 @@ LOWER_NUL_TABLE = str.maketrans(
     {**{chr(c): chr(c + 32) for c in range(0x41, 0x5B)}, "\x00": "_"}
 )
 NUL_TABLE = str.maketrans({"\x00": "_"})
-ASCII_LOWER_TABLE = str.maketrans(
-    {chr(c): chr(c + 32) for c in range(0x41, 0x5B)}
-)
 
 # Precompiled scanners (shared by tokenizer + serializers).
 RE_NAME_END = re.compile(r"[ \t\n\f\r/>]")        # tag-name terminators
@@ -99,15 +96,6 @@ RE_FAST_ATTR = re.compile(
     r"[ \t\n\f\r]+([^ \t\n\f\r=/>\x00]+)"
     r"(?:=\"([^\"\x00]*)\"|='([^'\x00]*)'"
     r"|=([^ \t\n\f\r>\x00'\"][^ \t\n\f\r>\x00]*))?")
-
-
-def ascii_lower(s: str) -> str:
-    """ASCII-only lowercase (C-locale tolower semantics)."""
-    return s.translate(ASCII_LOWER_TABLE)
-
-
-def is_ascii_alpha(c: str) -> bool:
-    return ("a" <= c <= "z") or ("A" <= c <= "Z")
 
 
 def collapse_spaces(s: str) -> str:

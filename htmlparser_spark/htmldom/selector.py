@@ -21,7 +21,7 @@ Faithful re-expression of the reference selector engine
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 from .constants import KIND_TAG, contains_word
 from .parse import Doc

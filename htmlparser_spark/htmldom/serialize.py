@@ -18,11 +18,10 @@ where script/style content IS included.
 from __future__ import annotations
 
 from html import unescape as _unescape
-from typing import FrozenSet, Iterable, List, Optional
+from typing import FrozenSet, List, Optional
 
 from .constants import (
     KIND_COMMENT,
-    KIND_DOCTYPE,
     KIND_TAG,
     KIND_TEXT,
     INLINE_TAGS,

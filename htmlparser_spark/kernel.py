@@ -14,17 +14,15 @@ because a single mapInPandas stage pipelines per Arrow batch).
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,

@@ -24,7 +24,7 @@ advice), every internal cache routes through ``caching.cache_df``:
 wrap build + action in ``with scoped_caches():`` and every block is
 unpersisted at scope exit (pytest-pinned in
 tests/test_dedup_scale.py::test_scoped_caches_release_blocks).
-One-shot jobs can still rely on LRU or ``clearCache()`` (bench.py).
+One-shot jobs can still rely on LRU or ``clearCache()``.
 """
 
 from __future__ import annotations

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..htmldom import Selector, parse, select
-from ..htmldom.constants import SPACE_TOKENIZER
 
 __all__ = ["selector_count", "selector_matches", "selector_to_column",
            "filter_nodes", "callback_events"]

@@ -2875,7 +2875,7 @@ def q_image_near_dups(spark, sf_dir):
     # ORACLE-SCALE PROBE ONLY: with the cap disabled (below), the
     # candidate join is quadratic WITHIN each planted class — safe at
     # the correctness SFs (500-5000 docs) but never to be promoted to
-    # bench.py or larger SFs, so fail loudly instead of blowing up
+    # a benchmark or larger SFs, so fail loudly instead of blowing up
     n_docs = docs.count()
     if n_docs > 20_000:
         raise ValueError(
