@@ -6,6 +6,20 @@ htmlparser_spark.zip: $(shell find htmlparser_spark -name '*.py')
 	rm -f $@
 	cd . && zip -qr $@ htmlparser_spark -i 'htmlparser_spark/*.py'
 
+# the file: system adapter (htmlparser_spark.session binds it); the
+# compiled jar is committed, tests/test_commit_path.py checks it matches
+JAR_SRC = htmlparser_spark/jvm/NioLocalFileSystem.java
+JAR = htmlparser_spark/jvm/htmlparser-localfs.jar
+SPARK_HOME ?= $(shell python -c 'import os, pyspark; print(os.path.dirname(pyspark.__file__))')
+
+jar: $(JAR)
+
+$(JAR): $(JAR_SRC)
+	rm -rf build/jvm && mkdir -p build/jvm
+	javac --release 17 -cp "$(SPARK_HOME)/jars/*" -d build/jvm $(JAR_SRC)
+	rm -f $@
+	cd build/jvm && jar --create --file ../../$@ --date=2000-01-01T00:00:00Z htmlparser_spark
+
 test:
 	python -m pytest tests/ -x -q
 
@@ -16,6 +30,6 @@ scaling:
 	python bench/scaling.py
 
 clean:
-	rm -f htmlparser_spark.zip
+	rm -rf htmlparser_spark.zip build
 
-.PHONY: zip test bench scaling clean
+.PHONY: zip jar test bench scaling clean

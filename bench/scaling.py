@@ -21,6 +21,7 @@ Protocol (BASELINE.md):
      write to parquet. Generation is NOT timed.
   2. `make zip`, then for cores in (8, 32):
      spark-submit --master local[cores] --py-files htmlparser_spark.zip
+         <the file: adapter flags, session.LOCALFS_SUBMIT_ARGS>
          jobs/extract.py --input ... --output ... --checkpoint ...
      Time only the pipeline (the job prints wall + turns/sec for the
      checkpointed extract stage itself).
@@ -48,6 +49,8 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from htmlparser_spark.session import LOCALFS_SUBMIT_ARGS  # noqa: E402
 
 N_TURNS = int(os.environ.get("SCALING_TURNS", "8000000"))
 WORKDIR = Path(os.environ.get("SCALING_WORKDIR", "/tmp/htmlparser_scaling"))
@@ -145,6 +148,8 @@ def run_at(cores: int, input_path: Path, tag: str = "",
         # per-task working set and keeps pauses short
         "--driver-memory", "12g",
         "--py-files", str(REPO / "htmlparser_spark.zip"),
+        # the file: system adapter, as the README's deploy line binds it
+        *LOCALFS_SUBMIT_ARGS,
         "--conf", f"spark.sql.shuffle.partitions={cores * 4}",
         "--conf", "spark.sql.adaptive.enabled=true",
         "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=16m",

@@ -21,14 +21,16 @@ Mechanism (SURVEY §3.2 stage 2/6):
 - The commit path is sized by cluster parallelism, not by bucket
   count: the write exchange runs ``min(n_buckets, defaultParallelism)``
   tasks (each bucket still lands in exactly one task, so still one
-  file), and the certify re-read lists the bucket directories on at
-  most as many tasks.
+  file), and the certify is one Spark job whose aggregate runs as many
+  tasks, after a driver-side listing of the ≤ n_buckets bucket
+  directories.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 from typing import Optional
 
 import pyarrow as pa
@@ -38,8 +40,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = ["with_partition_id", "completed_ids", "lineage_rows",
-           "append_manifest_rows", "cluster_buckets", "run_checkpointed",
-           "row_hash_expr"]
+           "append_manifest_rows", "cluster_buckets", "certify",
+           "run_checkpointed", "row_hash_expr"]
 
 MANIFEST_SCHEMA = pa.schema([("partition_id", pa.int64()),
                              ("n_rows", pa.int64()),
@@ -144,6 +146,55 @@ def cluster_buckets(out: DataFrame, n_buckets: int, extra_cols=(),
     return out
 
 
+@contextmanager
+def _session_conf(spark: SparkSession, settings: dict):
+    """Session conf ``settings`` (keys Spark defines, so each has a
+    value to restore) for the queries planned in the body."""
+    saved = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def certify(spark: SparkSession, output_path: str, schema, run_id: str,
+            tasks: int, skip=(), lineage_mode: str = "full",
+            extra_cols=()) -> list:
+    """Lineage rows of the buckets under ``output_path`` (except
+    ``skip``), computed from a RE-READ of what landed on disk, not from
+    the in-memory plan — they certify the committed data.
+
+    ``schema`` is the schema of the frame written, so no footer/
+    inference job runs, and a zero-row run reads back zero buckets
+    instead of failing inference on an empty directory. Column pruning
+    keeps the pass cheap: full mode reads back the hash inputs (not
+    raw_html); hash_col mode reads back only the 8-byte precomputed
+    row_hash column (see run_checkpointed).
+
+    The aggregate runs as ONE job: a fixed plan (AQE would run the
+    partial aggregate's exchange as a job of its own, then the
+    ≤ n_buckets-row result as a second one) with ``tasks`` shuffle
+    partitions. The scan keeps Spark's byte-sized splits: about
+    defaultParallelism of them below defaultParallelism × 128 MB of
+    output, and more, not fewer and larger, above it."""
+    written = spark.read.schema(schema).parquet(output_path)
+    if lineage_mode == "hash_col":
+        written = written.select("partition_id", ROW_HASH_COL)
+    else:
+        written = written.select("partition_id", "conv_id", "turn_idx",
+                                 *extra_cols, "extracted_text")
+    if skip:
+        written = written.filter(~F.col("partition_id").isin(list(skip)))
+    with _session_conf(spark, {"spark.sql.adaptive.enabled": "false",
+                               "spark.sql.shuffle.partitions": str(tasks)}):
+        return lineage_rows(written, run_id,
+                            from_hash_col=lineage_mode == "hash_col",
+                            extra_cols=extra_cols).collect()
+
+
 def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                      manifest_path: str, n_buckets: int = 64,
                      run_id: str = "run-0", key_col: str = "conv_id",
@@ -210,9 +261,14 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                   f"{marks[-1][1] - marks[-2][1]:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
     # the certify re-read lists one directory per bucket; above the
-    # parallel-discovery threshold Spark runs that listing as a job with
-    # a task per directory — cap it at the cluster's cores
+    # parallel-discovery threshold (32 by default) Spark runs that
+    # listing as a job with a task per directory. ≤ n_buckets
+    # directories are listed on the driver instead, and a larger
+    # listing runs on at most the cluster's cores
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                   str(max(n_buckets, 32)))
     spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
                    str(spark.sparkContext.defaultParallelism))
     # fused ordering (default): the ordering window rides the bucket
@@ -254,26 +310,9 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
     mark("extract+write")
-    # lineage is computed from a RE-READ of what landed on disk (not
-    # from the in-memory plan) — it certifies the committed data. The
-    # schema of the frame just written is passed, so no footer/
-    # inference job runs, and a zero-row run reads back zero buckets
-    # instead of failing inference on an empty directory. Column
-    # pruning keeps this pass cheap: full mode reads back the hash
-    # inputs (not raw_html); hash_col mode reads back only the 8-byte
-    # precomputed row_hash column (see docstring).
-    written = spark.read.schema(out.schema).parquet(output_path)
-    if lineage_mode == "hash_col":
-        written = written.select("partition_id", ROW_HASH_COL)
-    else:
-        written = written.select("partition_id", "conv_id", "turn_idx",
-                                 *extra_hash_cols, "extracted_text")
-    if done:
-        written = written.filter(~F.col("partition_id").isin(done))
-    rows = lineage_rows(written, run_id,
-                        from_hash_col=lineage_mode == "hash_col",
-                        extra_cols=extra_hash_cols) \
-        .collect()
+    rows = certify(spark, output_path, out.schema, run_id, tasks,
+                   skip=done or (), lineage_mode=lineage_mode,
+                   extra_cols=extra_hash_cols)
     mark("lineage")
     append_manifest_rows(rows, manifest_path)
     mark("manifest_append")

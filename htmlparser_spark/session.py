@@ -9,30 +9,48 @@ Settings rationale (targets a multi-executor cluster; local[N] here):
   2-3× total executor cores via spark-submit conf.
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- file: is served by ``NioLocalFileSystem`` (``jvm/``): Hadoop's local
+  file system sets permissions by spawning ``chmod`` when libhadoop is
+  absent, three child processes per written bucket; the adapter sets
+  them with a syscall. Its jar goes on the driver class path here; a
+  ``spark-submit`` of the job passes ``LOCALFS_SUBMIT_ARGS``.
+
+``configure`` holds the settings the spark-submit job and ``get_spark``
+share; ``get_spark`` adds the local master and its sizing.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "default_parallelism"]
+__all__ = ["get_spark", "configure", "default_parallelism", "LOCALFS_JAR",
+           "LOCALFS_CLASS", "LOCALFS_SUBMIT_ARGS"]
+
+LOCALFS_JAR = Path(__file__).resolve().parent / "jvm" / "htmlparser-localfs.jar"
+LOCALFS_CLASS = "htmlparser_spark.jvm.NioLocalFileSystem"
+# spark-submit resolves --py-files and --jars through the file: system
+# before the job's builder runs, and Hadoop caches that instance, so the
+# binding and the driver class path go on the submit command; --jars
+# alone loads the class too late for that lookup, and ships it to the
+# executors
+LOCALFS_SUBMIT_ARGS = ("--driver-class-path", str(LOCALFS_JAR),
+                       "--jars", str(LOCALFS_JAR),
+                       "--conf", f"spark.hadoop.fs.file.impl={LOCALFS_CLASS}")
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_max_records: int = 512) -> SparkSession:
-    cores = cores or default_parallelism()
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
+def configure(builder: SparkSession.Builder,
+              arrow_max_records: int = 512) -> SparkSession.Builder:
+    """The session settings every entry point runs with (see the
+    module docstring); the master is left to the caller."""
     return (
-        SparkSession.builder.appName(app)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # runtime skew-split for the dedup/selector self-joins: one
@@ -43,6 +61,20 @@ def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(arrow_max_records))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
+        .config("spark.driver.extraClassPath", str(LOCALFS_JAR))
+    )
+
+
+def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
+              shuffle_partitions: int | None = None,
+              arrow_max_records: int = 512) -> SparkSession:
+    cores = cores or default_parallelism()
+    shuffle_partitions = shuffle_partitions or max(cores, 8)
+    return (
+        configure(SparkSession.builder.appName(app), arrow_max_records)
+        .master(f"local[{cores}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()

@@ -2,7 +2,11 @@
 """spark-submit entry point for the transcripts extraction pipeline.
 
 Usage:
-    spark-submit --py-files htmlparser_spark.zip jobs/extract.py \
+    spark-submit --py-files htmlparser_spark.zip \
+        --driver-class-path htmlparser_spark/jvm/htmlparser-localfs.jar \
+        --jars htmlparser_spark/jvm/htmlparser-localfs.jar \
+        --conf spark.hadoop.fs.file.impl=htmlparser_spark.jvm.NioLocalFileSystem \
+        jobs/extract.py \
         --input /path/transcripts --output /path/out \
         --checkpoint /path/manifest [--format parquet|iceberg] \
         [--buckets 64] [--no-resume] [--synthetic N_TURNS] \
@@ -169,8 +173,11 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from htmlparser_spark.operators.checkpoint import run_checkpointed
+    from htmlparser_spark.session import configure
 
-    spark = SparkSession.builder.appName("htmlparser-extract").getOrCreate()
+    # the master and the cluster sizing come from spark-submit
+    spark = configure(SparkSession.builder.appName("htmlparser-extract")) \
+        .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # 32 MB parquet rowgroups (vs the 128 MB default) unless the
     # submitter set their own: with many concurrent writer tasks the
