@@ -21,9 +21,9 @@ Mechanism (SURVEY §3.2 stage 2/6):
 - The commit path is sized by cluster parallelism, not by bucket
   count: the write exchange runs ``min(n_buckets, defaultParallelism)``
   tasks (each bucket still lands in exactly one task, so still one
-  file), and the certify is one Spark job whose aggregate runs as many
-  tasks, after a driver-side listing of the ≤ n_buckets bucket
-  directories.
+  file), and the certify re-read lists up to ``DRIVER_LISTING_MAX``
+  bucket directories on the driver, a larger count on at most as many
+  tasks.
 """
 
 from __future__ import annotations
@@ -69,6 +69,11 @@ def completed_ids(path: str) -> Optional[list]:
 
 
 ROW_HASH_COL = "row_hash"
+
+# bucket directories the certify lists on the driver, one after another
+# (see certify): the driver listing was measured faster than the listing
+# job up to 64 directories on a local disk, and not beyond
+DRIVER_LISTING_MAX = 64
 
 
 def row_hash_expr(extra_cols=()):
@@ -161,8 +166,7 @@ def _session_conf(spark: SparkSession, settings: dict):
 
 
 def certify(spark: SparkSession, output_path: str, schema, run_id: str,
-            tasks: int, skip=(), lineage_mode: str = "full",
-            extra_cols=()) -> list:
+            skip=(), lineage_mode: str = "full", extra_cols=()) -> list:
     """Lineage rows of the buckets under ``output_path`` (except
     ``skip``), computed from a RE-READ of what landed on disk, not from
     the in-memory plan — they certify the committed data.
@@ -174,13 +178,19 @@ def certify(spark: SparkSession, output_path: str, schema, run_id: str,
     raw_html); hash_col mode reads back only the 8-byte precomputed
     row_hash column (see run_checkpointed).
 
-    The aggregate runs as ONE job: a fixed plan (AQE would run the
-    partial aggregate's exchange as a job of its own, then the
-    ≤ n_buckets-row result as a second one) with ``tasks`` shuffle
-    partitions. The scan keeps Spark's byte-sized splits: about
-    defaultParallelism of them below defaultParallelism × 128 MB of
-    output, and more, not fewer and larger, above it."""
-    written = spark.read.schema(schema).parquet(output_path)
+    The re-read lists one directory per bucket. Above Spark's parallel-
+    discovery threshold (32 by default) that listing runs as a job with
+    a task per directory; up to ``DRIVER_LISTING_MAX`` directories are
+    listed on the driver instead, and a larger listing stays a job on
+    at most the cluster's cores. Both settings hold for the re-read
+    only."""
+    listing = {
+        "spark.sql.sources.parallelPartitionDiscovery.threshold":
+            str(DRIVER_LISTING_MAX),
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism":
+            str(spark.sparkContext.defaultParallelism)}
+    with _session_conf(spark, listing):
+        written = spark.read.schema(schema).parquet(output_path)
     if lineage_mode == "hash_col":
         written = written.select("partition_id", ROW_HASH_COL)
     else:
@@ -188,11 +198,9 @@ def certify(spark: SparkSession, output_path: str, schema, run_id: str,
                                  *extra_cols, "extracted_text")
     if skip:
         written = written.filter(~F.col("partition_id").isin(list(skip)))
-    with _session_conf(spark, {"spark.sql.adaptive.enabled": "false",
-                               "spark.sql.shuffle.partitions": str(tasks)}):
-        return lineage_rows(written, run_id,
-                            from_hash_col=lineage_mode == "hash_col",
-                            extra_cols=extra_cols).collect()
+    return lineage_rows(written, run_id,
+                        from_hash_col=lineage_mode == "hash_col",
+                        extra_cols=extra_cols).collect()
 
 
 def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
@@ -261,16 +269,6 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                   f"{marks[-1][1] - marks[-2][1]:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    tasks = min(n_buckets, spark.sparkContext.defaultParallelism)
-    # the certify re-read lists one directory per bucket; above the
-    # parallel-discovery threshold (32 by default) Spark runs that
-    # listing as a job with a task per directory. ≤ n_buckets
-    # directories are listed on the driver instead, and a larger
-    # listing runs on at most the cluster's cores
-    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                   str(max(n_buckets, 32)))
-    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-                   str(spark.sparkContext.defaultParallelism))
     # fused ordering (default): the ordering window rides the bucket
     # write's exchange and sort (see cluster_buckets)
     ek = dict(extract_kwargs or {})
@@ -310,7 +308,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
     mark("extract+write")
-    rows = certify(spark, output_path, out.schema, run_id, tasks,
+    rows = certify(spark, output_path, out.schema, run_id,
                    skip=done or (), lineage_mode=lineage_mode,
                    extra_cols=extra_hash_cols)
     mark("lineage")

@@ -12,11 +12,13 @@ Settings rationale (targets a multi-executor cluster; local[N] here):
 - file: is served by ``NioLocalFileSystem`` (``jvm/``): Hadoop's local
   file system sets permissions by spawning ``chmod`` when libhadoop is
   absent, three child processes per written bucket; the adapter sets
-  them with a syscall. Its jar goes on the driver class path here; a
-  ``spark-submit`` of the job passes ``LOCALFS_SUBMIT_ARGS``.
+  them with a syscall. ``get_spark`` binds it and puts its jar on the
+  driver class path, which the gateway's JVM launch honours; a
+  ``spark-submit`` of the job passes ``LOCALFS_SUBMIT_ARGS`` instead,
+  because there both settings come too late to bind the driver.
 
 ``configure`` holds the settings the spark-submit job and ``get_spark``
-share; ``get_spark`` adds the local master and its sizing.
+share; ``get_spark`` adds the local master, its sizing and the adapter.
 """
 
 from __future__ import annotations
@@ -61,8 +63,6 @@ def configure(builder: SparkSession.Builder,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(arrow_max_records))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
-        .config("spark.driver.extraClassPath", str(LOCALFS_JAR))
     )
 
 
@@ -75,6 +75,8 @@ def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
         configure(SparkSession.builder.appName(app), arrow_max_records)
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
+        .config("spark.driver.extraClassPath", str(LOCALFS_JAR))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()

@@ -175,7 +175,8 @@ def main(argv=None) -> int:
     from htmlparser_spark.operators.checkpoint import run_checkpointed
     from htmlparser_spark.session import configure
 
-    # the master and the cluster sizing come from spark-submit
+    # the master, the cluster sizing and the file: adapter come from
+    # spark-submit (the Usage line above)
     spark = configure(SparkSession.builder.appName("htmlparser-extract")) \
         .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

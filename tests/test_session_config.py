@@ -8,7 +8,10 @@ from pathlib import Path
 import pytest
 from pyspark.sql import SparkSession
 
-from htmlparser_spark.session import LOCALFS_JAR, configure
+from htmlparser_spark.session import (LOCALFS_JAR, LOCALFS_SUBMIT_ARGS,
+                                      configure, get_spark)
+
+ADAPTER = ("spark.hadoop.fs.file.impl", "spark.driver.extraClassPath")
 
 
 def test_configure_sets_shared_options():
@@ -18,21 +21,19 @@ def test_configure_sets_shared_options():
     assert opts["spark.sql.adaptive.enabled"] == "true"
     assert opts["spark.sql.adaptive.coalescePartitions.enabled"] == "true"
     assert opts["spark.sql.adaptive.skewJoin.enabled"] == "true"
-    assert opts["spark.driver.extraClassPath"] == str(LOCALFS_JAR)
+    # the file: adapter binds only where the setting reaches the
+    # driver's launch: get_spark, or the submit line
     assert "spark.master" not in opts
-    # the bound file system class is the one the jar ships
-    cls = opts["spark.hadoop.fs.file.impl"].replace(".", "/") + ".class"
-    with zipfile.ZipFile(LOCALFS_JAR) as jar:
-        assert cls in jar.namelist()
+    assert not set(ADAPTER) & set(opts)
 
 
 class _Built(Exception):
     pass
 
 
-def test_job_session_uses_shared_options(monkeypatch, tmp_path):
-    """jobs/extract.py builds its session from ``configure`` and leaves
-    the master to spark-submit."""
+def _capture(monkeypatch):
+    """The options of the next builder's ``getOrCreate``, which raises
+    ``_Built`` instead of starting Spark."""
     seen = {}
 
     def capture(self):
@@ -40,6 +41,29 @@ def test_job_session_uses_shared_options(monkeypatch, tmp_path):
         raise _Built
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    return seen
+
+
+def test_get_spark_binds_localfs_adapter(monkeypatch):
+    """get_spark adds the local master and the file: adapter, whose jar
+    ships the bound class, to the shared options."""
+    seen = _capture(monkeypatch)
+    with pytest.raises(_Built):
+        get_spark(cores=2)
+    shared = configure(SparkSession.builder)._options
+    assert {k: seen.get(k) for k in shared} == shared
+    assert seen["spark.master"] == "local[2]"
+    assert seen["spark.driver.extraClassPath"] == str(LOCALFS_JAR)
+    impl = seen["spark.hadoop.fs.file.impl"]
+    assert f"spark.hadoop.fs.file.impl={impl}" in LOCALFS_SUBMIT_ARGS
+    with zipfile.ZipFile(LOCALFS_JAR) as jar:
+        assert impl.replace(".", "/") + ".class" in jar.namelist()
+
+
+def test_job_session_uses_shared_options(monkeypatch, tmp_path):
+    """jobs/extract.py builds its session from ``configure`` and leaves
+    the master and the file: adapter to spark-submit."""
+    seen = _capture(monkeypatch)
     path = Path(__file__).resolve().parent.parent / "jobs" / "extract.py"
     spec = importlib.util.spec_from_file_location("job_extract", path)
     job = importlib.util.module_from_spec(spec)
@@ -50,3 +74,4 @@ def test_job_session_uses_shared_options(monkeypatch, tmp_path):
     shared = configure(SparkSession.builder)._options
     assert {k: seen.get(k) for k in shared} == shared
     assert "spark.master" not in seen
+    assert not set(ADAPTER) & set(seen)
