@@ -19,7 +19,7 @@ Protocol (BASELINE.md):
   1. Generate a deterministic synthetic transcripts table once
      (distributed seeded generator, mega-conversation skew included),
      write to parquet. Generation is NOT timed.
-  2. `make zip`, then for cores in (8, 32):
+  2. `make zip`, then for each core count N of --cores (default 2, 8):
      spark-submit --master local[cores] --py-files htmlparser_spark.zip
          <the file: adapter flags, session.LOCALFS_SUBMIT_ARGS>
          jobs/extract.py --input ... --output ... --checkpoint ...
@@ -28,16 +28,19 @@ Protocol (BASELINE.md):
   3. Correctness across sizes: the two runs' lineage manifests must
      agree bucket-by-bucket on (partition_id, n_rows, content_hash) —
      same bytes out at both cluster sizes.
-  4. efficiency = (turns/sec @ 32) / (turns/sec @ 8) / 4 ; target >= 0.8.
+  4. efficiency = (turns/sec @ 4N) / (turns/sec @ N) / 4 ; target >= 0.8.
 
 Prints ONE JSON line and rewrites BENCH/BASELINE.md.
 
-Env knobs: SCALING_TURNS (default 1_600_000), SCALING_WORKDIR,
-SCALING_CORES (comma list, default "8,32").
+Usage: python bench/scaling.py [--turns 8000000] [--cores 2,8]
+[--workdir /tmp/htmlparser_scaling]; ``--help`` prints the flags and
+starts nothing. Env knobs: SCALING_ORDER_IMPL, SCALING_LINEAGE,
+SCALING_EXTRA_ARGS, SCALING_REPS, SCALING_KILL_RESUME (see below).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -52,9 +55,6 @@ sys.path.insert(0, str(REPO))
 
 from htmlparser_spark.session import LOCALFS_SUBMIT_ARGS  # noqa: E402
 
-N_TURNS = int(os.environ.get("SCALING_TURNS", "8000000"))
-WORKDIR = Path(os.environ.get("SCALING_WORKDIR", "/tmp/htmlparser_scaling"))
-CORES = [int(c) for c in os.environ.get("SCALING_CORES", "2,8").split(",")]
 # ordering strategy for BOTH legs (same job at both sizes — the ratio
 # must compare identical plans). 'two_phase' avoids the per-conv
 # window sort and measured fastest at 16 cores (BENCH/DIAGNOSIS_4_16)
@@ -111,7 +111,7 @@ def _burn(n):
     return s
 
 
-def generate_input(path: Path) -> dict:
+def generate_input(path: Path, n_turns: int) -> dict:
     """Write the synthetic transcripts parquet once (not timed)."""
     from htmlparser_spark.session import get_spark
     from htmlparser_spark.sources.transcripts import generate_distributed
@@ -119,7 +119,7 @@ def generate_input(path: Path) -> dict:
     spark = get_spark(app="scaling-gen", cores=os.cpu_count() or 32,
                       shuffle_partitions=64)
     spark.sparkContext.setLogLevel("ERROR")
-    df = generate_distributed(spark, N_TURNS, num_partitions=64,
+    df = generate_distributed(spark, n_turns, num_partitions=64,
                               mega_frac=0.05)
     df.write.mode("overwrite").parquet(str(path))
     from pyspark.sql import functions as F
@@ -130,11 +130,11 @@ def generate_input(path: Path) -> dict:
     return {"turns": stats["n"], "input_mb": round(stats["b"] / 1e6, 1)}
 
 
-def run_at(cores: int, input_path: Path, tag: str = "",
+def run_at(cores: int, input_path: Path, workdir: Path, tag: str = "",
            extra_args: tuple = (), ok_codes: tuple = (0,),
            fresh: bool = True) -> dict:
-    out = WORKDIR / f"out_{cores}{tag}"
-    ck = WORKDIR / f"ck_{cores}{tag}"
+    out = workdir / f"out_{cores}{tag}"
+    ck = workdir / f"ck_{cores}{tag}"
     if fresh:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
@@ -179,7 +179,7 @@ def run_at(cores: int, input_path: Path, tag: str = "",
     proc = subprocess.run(cmd, capture_output=True, text=True, env=env,
                           cwd=str(REPO))
     wall_total = time.time() - t0
-    (WORKDIR / f"run_{cores}{tag}.log").write_text(
+    (workdir / f"run_{cores}{tag}.log").write_text(
         proc.stdout[-20000:] + "\n--- stderr ---\n" + proc.stderr[-5000:])
     if proc.returncode not in ok_codes:
         sys.stderr.write(proc.stdout[-4000:] + proc.stderr[-4000:])
@@ -197,8 +197,8 @@ def run_at(cores: int, input_path: Path, tag: str = "",
             "checkpoint": str(ck)}
 
 
-def kill_resume_check(input_path: Path, cores: int,
-                      ref_checkpoint: str, kill_after: int = 16) -> dict:
+def kill_resume_check(input_path: Path, cores: int, ref_checkpoint: str,
+                      workdir: Path, kill_after: int = 16) -> dict:
     """Failure-injection evidence: a run hard-killed (os._exit, no JVM
     shutdown) right after committing ``kill_after`` buckets, then a
     plain re-run. Asserts the resume processed ONLY the missing
@@ -206,10 +206,10 @@ def kill_resume_check(input_path: Path, cores: int,
     run's on (partition_id, n_rows, content_hash)."""
     import duckdb
 
-    killed = run_at(cores, input_path, tag="_kr",
+    killed = run_at(cores, input_path, workdir, tag="_kr",
                     extra_args=("--kill-after-bucket", str(kill_after)),
                     ok_codes=(137,))
-    resumed = run_at(cores, input_path, tag="_kr", fresh=False)
+    resumed = run_at(cores, input_path, workdir, tag="_kr", fresh=False)
     q = ("select partition_id, n_rows, content_hash "
          "from read_parquet('{}/*.parquet') order by 1")
     got = duckdb.sql(q.format(killed["checkpoint"])).fetchall()
@@ -237,14 +237,33 @@ def manifests_agree(paths: list[str]) -> bool:
     return all(s == sets[0] for s in sets[1:])
 
 
-def main() -> int:
-    WORKDIR.mkdir(parents=True, exist_ok=True)
+def parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Run the extraction job at N and 4N local cores on "
+                    "one synthetic input and report scaling efficiency.")
+    ap.add_argument("--turns", type=int, default=8_000_000,
+                    help="synthetic transcript turns (default: %(default)s)")
+    ap.add_argument("--cores", default="2,8",
+                    type=lambda v: [int(c) for c in v.split(",")],
+                    help="comma list of local[N] sizes, smallest first "
+                         "(default: 2,8)")
+    ap.add_argument("--workdir", type=Path,
+                    default=Path("/tmp/htmlparser_scaling"),
+                    help="input table, outputs and logs "
+                         "(default: %(default)s)")
+    return ap.parse_args(argv)
+
+
+def main(argv=None) -> int:
+    args = parse_args(argv)
+    workdir, cores = args.workdir, args.cores
+    workdir.mkdir(parents=True, exist_ok=True)
     Path("/dev/shm/spark-local").mkdir(exist_ok=True)
     subprocess.run(["make", "-s", "zip"], cwd=str(REPO), check=True)
-    input_path = WORKDIR / f"transcripts_{N_TURNS}"
+    input_path = workdir / f"transcripts_{args.turns}"
     marker = input_path / "_SUCCESS"
     if not marker.exists():
-        gen = generate_input(input_path)
+        gen = generate_input(input_path, args.turns)
     else:
         from htmlparser_spark.session import get_spark
         from pyspark.sql import functions as F
@@ -262,12 +281,12 @@ def main() -> int:
     reps = int(os.environ.get("SCALING_REPS", "2"))
     by_core: dict = {}
     for _ in range(reps):
-        for c in CORES:
-            r = run_at(c, input_path)
+        for c in cores:
+            r = run_at(c, input_path, workdir)
             cur = by_core.get(c)
             if cur is None or r["turns_per_sec"] > cur["turns_per_sec"]:
                 by_core[c] = r
-    runs = [by_core[c] for c in CORES]
+    runs = [by_core[c] for c in cores]
     ok = manifests_agree([r["checkpoint"] for r in runs])
 
     lo, hi = runs[0], runs[-1]
@@ -277,7 +296,7 @@ def main() -> int:
         # committed buckets, resume, compare against the uninterrupted
         # manifest just produced above
         kr = kill_resume_check(input_path, hi["cores"],
-                               hi["checkpoint"])
+                               hi["checkpoint"], workdir)
     ratio = hi["cores"] / lo["cores"]
     eff = (hi["turns_per_sec"] / lo["turns_per_sec"]) / ratio
     ceiling = cpu_ceiling(lo["cores"], hi["cores"])
@@ -350,7 +369,7 @@ Cross-size correctness: lineage manifests of the two runs agree
 bucket-by-bucket on (partition_id, n_rows, content_hash): **{ok}** —
 byte-identical extraction output at both parallelism levels.
 {_kr_section(kr)}
-Reproduce: `make scaling` (env: SCALING_TURNS, SCALING_CORES,
+Reproduce: `make scaling` (flags: --turns, --cores; env:
 SCALING_EXTRA_ARGS, SCALING_KILL_RESUME=0 to skip failure injection).
 """)
     (bench_dir / "scaling.json").write_text(json.dumps(

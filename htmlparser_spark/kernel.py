@@ -1,24 +1,29 @@
 """Arrow-batch kernels + Spark schemas: the Python↔JVM boundary.
 
-Everything here is a *vectorized* batch function (``mapInPandas`` /
-scalar ``pandas_udf``) — no per-row Python UDFs anywhere (contract
-from BASELINE.json input_hint). Each kernel is a pure function of the
+Every HTML-surface operator crosses into Python through one of two
+helpers built on ``DataFrame.mapInArrow``: ``map_docs`` (one row out
+per row in) and ``flatmap_docs`` (N rows out per row in). They own
+the batch loop, NULL text, passthrough vs dropped source text, the
+output schema and the Arrow types, so a kernel is only a function of
+one document's text. No per-row Python UDFs anywhere (contract from
+BASELINE.json input_hint). Each kernel is a pure function of the
 ``text`` column, which is what makes the pipeline idempotent and
 checkpoint-resumable.
 
 The parse kernel fuses tokenize → tree-build → boilerplate-strip →
 serialize into ONE stage (the reference gets the same effect from
 parse-time callbacks, html.cpp:539-553; in Spark the fusion is free
-because a single mapInPandas stage pipelines per Arrow batch).
+because a single mapInArrow stage pipelines per Arrow batch).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -35,11 +40,9 @@ __all__ = [
     "NODE_STRUCT",
     "ERROR_STRUCT",
     "EXTRACT_OUTPUT_FIELDS",
-    "extract_result_schema",
-    "make_extract_fn",
+    "map_docs",
+    "flatmap_docs",
     "extract_text",
-    "nodes_schema",
-    "make_explode_nodes_fn",
     "explode_nodes",
 ]
 
@@ -74,62 +77,77 @@ EXTRACT_OUTPUT_FIELDS = [
 ]
 
 
-def extract_result_schema(passthrough: StructType,
-                          include_raw: bool = True,
-                          drop_cols: tuple = ()) -> StructType:
-    fields = [f for f in passthrough.fields if f.name not in drop_cols]
-    for f in EXTRACT_OUTPUT_FIELDS:
-        if f.name == "raw_html" and not include_raw:
-            continue
-        fields.append(f)
-    return StructType(fields)
+def _arrays(rows: list, types: list) -> list:
+    """Transpose row tuples into one Arrow array per output field."""
+    cols = zip(*rows) if rows else [()] * len(types)
+    return [pa.array(c, type=t) for c, t in zip(cols, types)]
 
 
-def make_extract_fn(text_col: str = "text", strip: bool = True,
-                    include_raw: bool = True, raw_collapse: bool = False,
-                    drop_text: bool = False, decode_entities: bool = False):
-    """Build the mapInPandas kernel: per Arrow batch, parse every turn
-    and emit extracted_text (+ raw_html, node/error counts).
+def map_docs(df: DataFrame, fn: Callable[[str], tuple],
+             out_fields: Sequence[StructField], null_row: tuple,
+             text_col: str = "text", drop_text: bool = False) -> DataFrame:
+    """One row out per row in: ``df``'s columns (without ``text_col``
+    when ``drop_text``) followed by ``out_fields``, filled from the
+    tuple ``fn(text)``; a NULL text yields ``null_row``.
 
-    ``strip`` toggles the boilerplate-strip stage (drop script/style
-    subtrees) — ON for the pipeline, OFF for reference-equality runs.
-    ``decode_entities`` (opt-in, default OFF = reference byte-equality)
-    decodes HTML5 character references per text node in extracted_text
-    only (htmldom/fused.py).
-    """
-    from .htmldom.fused import extract_fused
+    The passthrough columns go back as the Arrow arrays that came in.
+    Dropping the source HTML here, not in a later projection, keeps it
+    out of the Arrow return transfer and every downstream shuffle — at
+    10^12-turn scale the raw HTML is the widest column in the table."""
+    names = df.schema.names
+    t = names.index(text_col)
+    keep = [i for i in range(len(names)) if not (drop_text and i == t)]
+    schema = StructType([df.schema.fields[i] for i in keep]
+                        + list(out_fields))
+    types = [to_arrow_type(f.dataType) for f in out_fields]
 
-    def extract_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            n = len(texts)
-            ext = [None] * n
-            raw = [None] * n
-            n_nodes = [0] * n
-            n_errors = [0] * n
-            for i, s in enumerate(texts):
+    def batch_fn(batches: Iterator[pa.RecordBatch]
+                 ) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            rows = [null_row if s is None else fn(s)
+                    for s in rb.column(t).to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(i) for i in keep] + _arrays(rows, types),
+                names=schema.names)
+
+    return df.mapInArrow(batch_fn, schema)
+
+
+def flatmap_docs(df: DataFrame, fn: Callable[..., Iterable[tuple]],
+                 key_cols: Sequence[str],
+                 out_fields: Sequence[StructField],
+                 text_col: str = "text",
+                 arg_cols: Sequence[str] = ()) -> DataFrame:
+    """N rows out per row in: ``key_cols`` (in the order given)
+    followed by ``out_fields``, one row per tuple that
+    ``fn(text, *args)`` yields, ``args`` being the row's ``arg_cols``
+    values; a NULL text yields no rows. The key columns are repeated
+    Arrow-side (``take``), never converted to Python."""
+    key_cols = list(key_cols)
+    nk = len(key_cols)
+    schema = StructType([df.schema[k] for k in key_cols] + list(out_fields))
+    types = [to_arrow_type(f.dataType) for f in out_fields]
+
+    def batch_fn(batches: Iterator[pa.RecordBatch]
+                 ) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            rows: list = []
+            idx: list = []
+            inputs = zip(*(c.to_pylist() for c in rb.columns[nk:]))
+            for i, (s, *args) in enumerate(inputs):
                 if s is None:
                     continue
-                # fused single-pass kernel (differentially tested against
-                # the Doc path in tests/test_fused_equivalence.py)
-                ext[i], raw[i], n_nodes[i], n_errors[i] = extract_fused(
-                    s, strip=strip, want_raw=include_raw,
-                    raw_collapse=raw_collapse,
-                    decode_entities=decode_entities)
-            # dropping the source HTML here (not in a later projection)
-            # keeps it out of the Arrow return transfer and every
-            # downstream shuffle — at 10^12-turn scale the raw HTML is
-            # the widest column in the table
-            out = (pdf.drop(columns=[text_col]) if drop_text
-                   else pdf.copy())
-            out["extracted_text"] = pd.Series(ext, dtype="object")
-            if include_raw:
-                out["raw_html"] = pd.Series(raw, dtype="object")
-            out["n_nodes"] = pd.Series(n_nodes, dtype="int32")
-            out["n_errors"] = pd.Series(n_errors, dtype="int32")
-            yield out
+                n0 = len(rows)
+                rows.extend(fn(s, *args))
+                idx += [i] * (len(rows) - n0)
+            take = pa.array(idx, type=pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(k).take(take) for k in range(nk)]
+                + _arrays(rows, types),
+                names=schema.names)
 
-    return extract_fn
+    return (df.select(*key_cols, text_col, *arg_cols)
+            .mapInArrow(batch_fn, schema))
 
 
 def extract_text(df: DataFrame, text_col: str = "text", strip: bool = True,
@@ -137,82 +155,57 @@ def extract_text(df: DataFrame, text_col: str = "text", strip: bool = True,
                  drop_text: bool = False,
                  decode_entities: bool = False) -> DataFrame:
     """DataFrame-level extraction: append extracted_text / raw_html /
-    n_nodes / n_errors to ``df`` via one Arrow-batched stage.
+    n_nodes / n_errors to ``df`` via one Arrow-batched stage; a NULL
+    text yields NULL text columns and zero counts.
+
+    ``strip`` toggles the boilerplate-strip stage (drop script/style
+    subtrees) — ON for the pipeline, OFF for reference-equality runs.
     ``drop_text=True`` removes the source HTML column from the output
     (shuffle/sink payload reduction for the pipeline hot path).
     ``decode_entities=True`` opts in to HTML5 character-reference
     decoding of extracted_text (default OFF = reference
-    byte-equality)."""
-    schema = extract_result_schema(
-        df.schema, include_raw=include_raw,
-        drop_cols=(text_col,) if drop_text else ())
-    fn = make_extract_fn(text_col=text_col, strip=strip,
-                         include_raw=include_raw, raw_collapse=raw_collapse,
-                         drop_text=drop_text,
-                         decode_entities=decode_entities)
-    return df.mapInPandas(fn, schema)
+    byte-equality; htmldom/fused.py)."""
+    from .htmldom.fused import extract_fused
+
+    def fn(s):
+        # fused single-pass kernel (differentially tested against the
+        # Doc path in tests/test_fused_equivalence.py)
+        ext, raw, n_nodes, n_errors = extract_fused(
+            s, strip=strip, want_raw=include_raw,
+            raw_collapse=raw_collapse, decode_entities=decode_entities)
+        if include_raw:
+            return ext, raw, n_nodes, n_errors
+        return ext, n_nodes, n_errors
+
+    out_fields = [f for f in EXTRACT_OUTPUT_FIELDS
+                  if include_raw or f.name != "raw_html"]
+    null_row = (None,) * (len(out_fields) - 2) + (0, 0)
+    return map_docs(df, fn, out_fields, null_row, text_col=text_col,
+                    drop_text=drop_text)
 
 
-def nodes_schema(passthrough: StructType) -> StructType:
-    """Schema of the exploded nodes view: passthrough keys + NODE_STRUCT
-    fields as top-level columns (one output row per DOM node)."""
-    return StructType(list(passthrough.fields) + list(NODE_STRUCT.fields))
-
-
-def make_explode_nodes_fn(text_col: str = "text", key_cols=("doc_id",)):
-    """Build a mapInPandas kernel producing the exploded relational DOM:
-    one row per node, keyed by ``key_cols``. Selector predicates become
-    plain Spark SQL filters over this view (SURVEY §2.C mapping)."""
-    key_cols = list(key_cols)
-
-    def explode_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = {k: [] for k in key_cols}
-            cols = {
-                "node_id": [], "parent_id": [], "depth": [], "kind": [],
-                "tag_name": [], "content": [], "attrs": [],
-                "self_closing": [], "tag_index": [], "n_tag_children": [],
-                "n_tag_siblings": [], "ancestor_ids": [],
-            }
-            for row in pdf[key_cols + [text_col]].itertuples(index=False):
-                s = row[-1]
-                if s is None:
-                    continue
-                doc = parse(s)
-                m = len(doc)
-                for k, v in zip(key_cols, row[:-1]):
-                    keys[k].extend([v] * m)
-                cols["node_id"].extend(range(m))
-                cols["parent_id"].extend(doc.parent)
-                cols["depth"].extend(doc.depth)
-                cols["kind"].extend(doc.kind)
-                cols["tag_name"].extend(doc.tag)
-                cols["content"].extend(doc.content)
-                cols["attrs"].extend(doc.attrs)
-                cols["self_closing"].extend(doc.self_closing)
-                cols["tag_index"].extend(doc.tag_index)
-                cols["n_tag_children"].extend(doc.n_tag_children)
-                # parent's final tag count (powers the :last predicate)
-                cols["n_tag_siblings"].extend(
-                    doc.node_count_of(p) for p in doc.parent)
-                # ancestors root→parent, computed incrementally (parent
-                # precedes child in pre-order)
-                anc: list = [None] * m
-                parent = doc.parent
-                for nid in range(m):
-                    p = parent[nid]
-                    anc[nid] = [] if p < 0 else anc[p] + [p]
-                cols["ancestor_ids"].extend(anc)
-            out = pd.DataFrame({**keys, **cols})
-            yield out
-
-    return explode_fn
+def _dom_rows(s: str):
+    """One NODE_STRUCT tuple per DOM node of ``s``, in pre-order."""
+    doc = parse(s)
+    parent = doc.parent
+    # ancestors root→parent, computed incrementally (parent precedes
+    # child in pre-order)
+    anc: list = []
+    for p in parent:
+        anc.append([] if p < 0 else anc[p] + [p])
+    return zip(range(len(doc)), parent, doc.depth, doc.kind, doc.tag,
+               doc.content, doc.attrs, doc.self_closing, doc.tag_index,
+               doc.n_tag_children,
+               # parent's final tag count (powers the :last predicate)
+               [doc.node_count_of(p) for p in parent],
+               anc)
 
 
 def explode_nodes(df: DataFrame, text_col: str = "text",
                   key_cols=("doc_id",)) -> DataFrame:
-    """Exploded relational DOM view of ``df[text_col]``."""
-    passthrough = StructType([df.schema[k] for k in key_cols])
-    fn = make_explode_nodes_fn(text_col=text_col, key_cols=key_cols)
-    return df.select(*key_cols, text_col).mapInPandas(
-        fn, nodes_schema(passthrough))
+    """Exploded relational DOM view of ``df[text_col]``: ``key_cols``
+    plus NODE_STRUCT fields as top-level columns, one output row per
+    DOM node. Selector predicates become plain Spark SQL filters over
+    this view (SURVEY §2.C mapping)."""
+    return flatmap_docs(df, _dom_rows, key_cols, NODE_STRUCT.fields,
+                        text_col=text_col)

@@ -6,20 +6,19 @@ everything else): classify block-level DOM elements by integer link
 density and text mass (htmldom/content.py — boilerpipe/readability
 family heuristics), keep article-like blocks, drop navigation chrome.
 
-Scale shape (100 TB): both surfaces are MAP-ONLY — one mapInPandas
-stage over (keys, text), no shuffle, no state; the scoring is a pure
-function of the text column so the stage composes with the pipeline's
-checkpoint/resume contract exactly like the parse kernel. The block
-surface explodes to per-block rows Python-side *within the same
-stage* (no Spark explode of an intermediate array column, so block
-arrays never hit the Arrow boundary as nested payloads).
+Scale shape (100 TB): both surfaces are MAP-ONLY — one Arrow stage
+(``kernel.map_docs`` / ``kernel.flatmap_docs``) over (keys, text), no
+shuffle, no state; the scoring is a pure function of the text column
+so the stage composes with the pipeline's checkpoint/resume contract
+exactly like the parse kernel. The block surface explodes to
+per-block rows Python-side *within the same stage* (no Spark explode
+of an intermediate array column, so block arrays never hit the Arrow
+boundary as nested payloads).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
+from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -28,11 +27,11 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.content import main_content, score_blocks
 from ..htmldom.parse import parse
+from ..kernel import flatmap_docs, map_docs
 
 __all__ = ["extract_main_content", "content_blocks", "extract_markdown"]
 
@@ -62,32 +61,13 @@ def extract_main_content(df: DataFrame, text_col: str = "text",
     ``drop_text`` removes the source HTML inside the kernel (before
     the Arrow return transfer), same rationale as kernel.extract_text.
     """
-    fields = [f for f in df.schema.fields
-              if not (drop_text and f.name == text_col)]
-    schema = StructType(fields + _MAIN_FIELDS)
+    def fn(s):
+        return main_content(parse(s), min_text_len=min_text_len,
+                            link_density_pct=link_density_pct,
+                            decode_entities=decode_entities)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            n = len(texts)
-            main = [None] * n
-            kept = [0] * n
-            cand = [0] * n
-            for i, s in enumerate(texts):
-                if s is None:
-                    continue
-                main[i], kept[i], cand[i] = main_content(
-                    parse(s), min_text_len=min_text_len,
-                    link_density_pct=link_density_pct,
-                    decode_entities=decode_entities)
-            out = (pdf.drop(columns=[text_col]) if drop_text
-                   else pdf.copy())
-            out["main_text"] = pd.Series(main, dtype="object")
-            out["n_kept_blocks"] = pd.Series(kept, dtype="int32")
-            out["n_candidate_blocks"] = pd.Series(cand, dtype="int32")
-            yield out
-
-    return df.mapInPandas(fn, schema=schema)
+    return map_docs(df, fn, _MAIN_FIELDS, (None, 0, 0), text_col=text_col,
+                    drop_text=drop_text)
 
 
 def content_blocks(df: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
@@ -96,32 +76,12 @@ def content_blocks(df: DataFrame, key_cols: Tuple[str, ...] = ("doc_id",),
     """Exploded per-block scoring rows — the element-span surface:
     (key_cols…, node_id, tag_name, text_chars, anchor_chars, kept),
     one row per innermost candidate block, document order."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _BLOCK_FIELDS)
-    keys = list(key_cols)
+    def fn(s):
+        return score_blocks(parse(s), min_text_len=min_text_len,
+                            link_density_pct=link_density_pct)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, s = tup
-                if s is None:
-                    continue
-                for nid, tag, tc, ac, kp in score_blocks(
-                        parse(s), min_text_len=min_text_len,
-                        link_density_pct=link_density_pct):
-                    rows.append((*kv, nid, tag, tc, ac, kp))
-            out = pd.DataFrame(
-                rows, columns=keys + ["node_id", "tag_name",
-                                      "text_chars", "anchor_chars",
-                                      "kept"])
-            # explicit dtypes so an all-filtered (empty) batch still
-            # carries an Arrow-convertible frame
-            out = out.astype({"node_id": "int32", "text_chars": "int64",
-                              "anchor_chars": "int64", "kept": "bool"})
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return flatmap_docs(df, fn, keys, _BLOCK_FIELDS, text_col=text_col)
 
 
 _MD_FIELDS = [StructField("markdown", StringType(), True)]
@@ -142,19 +102,8 @@ def extract_markdown(df: DataFrame, text_col: str = "text",
     return transfer."""
     from ..htmldom.markdown import to_markdown
 
-    fields = [f for f in df.schema.fields
-              if not (drop_text and f.name == text_col)]
-    schema = StructType(fields + _MD_FIELDS)
+    def fn(s):
+        return (to_markdown(parse(s), decode_entities=decode_entities),)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            md = [None if s is None else
-                  to_markdown(parse(s), decode_entities=decode_entities)
-                  for s in texts]
-            out = (pdf.drop(columns=[text_col]) if drop_text
-                   else pdf.copy())
-            out["markdown"] = pd.Series(md, dtype="object")
-            yield out
-
-    return df.mapInPandas(fn, schema=schema)
+    return map_docs(df, fn, _MD_FIELDS, (None,), text_col=text_col,
+                    drop_text=drop_text)

@@ -12,8 +12,9 @@ Stage layout (SURVEY §3.2), designed for 10^12-turn scale:
                    conv_id) is spread uniformly because the hash
                    includes turn_idx; the parse stage is row-
                    independent so any uniform distribution is correct.
-4. parse kernel  — ONE fused mapInPandas stage (tokenize → DOM →
-                   strip → serialize); pure function of `text`.
+4. parse kernel  — ONE fused mapInArrow stage (tokenize → DOM →
+                   strip → serialize, kernel.extract_text); pure
+                   function of `text`.
 5. order         — window over (conv_id) ordered by turn_idx restores
                    stable turn ordering (turn_seq column); this is the
                    only keyed shuffle and hash-partitions well.
@@ -194,7 +195,7 @@ def extract_transcripts(df: DataFrame, *, strip: bool = True,
     # kernel stays out of it (deriving offsets from the extracted
     # frame would re-run the kernel — Catalyst plans the branch as a
     # separate subtree and ReuseExchange does not fire across
-    # mapInPandas stages; measured 2× pipeline cost).
+    # Python map stages; measured 2× pipeline cost).
     offsets = bucket_offsets(df) if (order and order_impl == "two_phase") \
         else None
     out = extract_text(out, text_col="text", strip=strip,

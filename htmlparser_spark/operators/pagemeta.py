@@ -10,20 +10,16 @@ with the pipeline checkpoint/resume contract like the parse kernel.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.meta import META_FIELDS, extract_page_meta
 from ..htmldom.parse import parse
+from ..kernel import map_docs
 
 __all__ = ["extract_page_metadata"]
 
@@ -43,20 +39,9 @@ def extract_page_metadata(df: DataFrame, text_col: str = "text",
     False — the caller decides the crawl policy for unparsed rows).
     ``drop_text`` removes the source HTML before the Arrow return
     transfer."""
-    fields = [f for f in df.schema.fields
-              if not (drop_text and f.name == text_col)]
-    schema = StructType(fields + _META_FIELDS_SQL)
+    def fn(s):
+        meta = extract_page_meta(parse(s))
+        return tuple(meta[name] for name in META_FIELDS)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = dict.fromkeys(META_FIELDS)
-        for pdf in batches:
-            metas = [empty if s is None else extract_page_meta(parse(s))
-                     for s in pdf[text_col]]
-            out = (pdf.drop(columns=[text_col]) if drop_text
-                   else pdf.copy())
-            for name in META_FIELDS:
-                out[name] = pd.Series(
-                    [m[name] for m in metas], dtype="object")
-            yield out
-
-    return df.mapInPandas(fn, schema=schema)
+    return map_docs(df, fn, _META_FIELDS_SQL, (None,) * len(META_FIELDS),
+                    text_col=text_col, drop_text=drop_text)

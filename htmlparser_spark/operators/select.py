@@ -15,15 +15,14 @@ Two execution strategies (SURVEY §2.C):
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
-
-import pandas as pd
+from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField
 
 from ..htmldom import Selector, parse, select
+from ..kernel import flatmap_docs, map_docs
 
 __all__ = ["selector_count", "selector_matches", "selector_to_column",
            "filter_nodes", "callback_events"]
@@ -33,22 +32,14 @@ def selector_count(df: DataFrame, selector: str, text_col: str = "text",
                    key_cols=("doc_id",), nested: bool = True,
                    out_col: str = "n_matches") -> DataFrame:
     """Per-document match count for an arbitrary selector (kernel path)."""
-    key_cols = list(key_cols)
     sel = Selector(selector)  # compile on driver; broadcast via closure
-    schema = StructType(
-        [df.schema[k] for k in key_cols] + [StructField(out_col, LongType())])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            counts = [
-                len(select(parse(s), sel, nested=nested)) if s is not None else 0
-                for s in pdf[text_col]
-            ]
-            out = pdf[key_cols].copy()
-            out[out_col] = pd.Series(counts, dtype="int64")
-            yield out
+    def fn(s):
+        return (len(select(parse(s), sel, nested=nested)),)
 
-    return df.select(*key_cols, text_col).mapInPandas(fn, schema)
+    return map_docs(df.select(*key_cols, text_col), fn,
+                    [StructField(out_col, LongType())], (0,),
+                    text_col=text_col, drop_text=True)
 
 
 def selector_matches(df: DataFrame, selector: str, text_col: str = "text",
@@ -57,39 +48,20 @@ def selector_matches(df: DataFrame, selector: str, text_col: str = "text",
     extracted_text-of-subtree). Kernel path, exact walk order."""
     from ..htmldom import to_text
 
-    key_cols = list(key_cols)
     sel = Selector(selector)
-    schema_fields = [df.schema[k] for k in key_cols]
-    schema = StructType(schema_fields + [
+    fields = [
         StructField("match_seq", LongType()),
         StructField("node_id", LongType()),
         StructField("tag_name", StringType()),
         StructField("match_text", StringType()),
-    ])
+    ]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = {k: [] for k in key_cols}
-            seqs: List[int] = []
-            nids: List[int] = []
-            tags: List[str] = []
-            texts: List[str] = []
-            for row in pdf[key_cols + [text_col]].itertuples(index=False):
-                s = row[-1]
-                if s is None:
-                    continue
-                doc = parse(s)
-                for seq, nid in enumerate(select(doc, sel, nested=nested)):
-                    for k, v in zip(key_cols, row[:-1]):
-                        keys[k].append(v)
-                    seqs.append(seq)
-                    nids.append(nid)
-                    tags.append(doc.tag[nid])
-                    texts.append(to_text(doc, node_id=nid))
-            yield pd.DataFrame({**keys, "match_seq": seqs, "node_id": nids,
-                                "tag_name": tags, "match_text": texts})
+    def fn(s):
+        doc = parse(s)
+        return [(seq, nid, doc.tag[nid], to_text(doc, node_id=nid))
+                for seq, nid in enumerate(select(doc, sel, nested=nested))]
 
-    return df.select(*key_cols, text_col).mapInPandas(fn, schema)
+    return flatmap_docs(df, fn, key_cols, fields, text_col=text_col)
 
 
 # ---- Catalyst path -----------------------------------------------------
@@ -213,93 +185,69 @@ def callback_events(df: DataFrame, selectors, text_col: str = "text",
     flushes a text node carrying the partial close-tag name and
     committed attrs, html.cpp:1008-1010).
 
-    Scale: the same mapInPandas shape as the other kernel operators —
-    per-document work, no shuffle, Arrow-batched; output rows are tiny
-    (two ints + two short strings) regardless of document size.
+    Scale: the same ``flatmap_docs`` shape as the other kernel
+    operators — per-document work, no shuffle, Arrow-batched; output
+    rows are tiny (two ints + two short strings) regardless of
+    document size.
     """
     from ..htmldom import CallbackParser
     from ..htmldom.callbacks import CloseNode
     from ..htmldom.constants import (
         KIND_COMMENT, KIND_DOCTYPE, KIND_TAG, KIND_TEXT)
 
-    key_cols = list(key_cols)
     kind_name = {KIND_TAG: "open", KIND_TEXT: "text",
                  KIND_COMMENT: "comment", KIND_DOCTYPE: "doctype"}
-    schema = StructType(
-        [df.schema[k] for k in key_cols] + [
-            StructField("event_seq", LongType(), False),
-            StructField("cb_idx", LongType(), False),
-            StructField("kind", StringType(), False),
-            StructField("tag_name", StringType(), False),
-        ] + ([StructField(f"{attr}_attr", StringType(), False)]
-             if attr else []))
+    fields = [
+        StructField("event_seq", LongType(), False),
+        StructField("cb_idx", LongType(), False),
+        StructField("kind", StringType(), False),
+        StructField("tag_name", StringType(), False),
+    ] + ([StructField(f"{attr}_attr", StringType(), False)]
+         if attr else [])
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = {k: [] for k in key_cols}
-            seqs: List[int] = []
-            cbs: List[int] = []
-            kinds: List[str] = []
-            tags: List[str] = []
-            avals: List[str] = []
+    def fn(html):
+        # fresh parser per doc: the counter closure and rows are
+        # per-document
+        p = CallbackParser()
+        seq = {"i": -1}
+        fired: List[tuple] = []
 
-            for row in pdf[key_cols + [text_col]].itertuples(index=False):
-                html = row[-1]
-                if html is None:
-                    continue
-                # fresh parser per doc: the counter closure and rows
-                # are per-document
-                p = CallbackParser()
-                seq = {"i": -1}
-                fired: List[tuple] = []
+        def _aval(d, n):
+            if not attr:
+                return ()
+            at = d.attrs[n]
+            return (at.get(attr, "") if at else "",)
 
-                def _aval(d, n):
-                    at = d.attrs[n]
-                    return at.get(attr, "") if at else ""
+        def mk(idx):
+            def cb(d, n):
+                if isinstance(d, CloseNode):
+                    fired.append((seq["i"], idx, "close", d.tag[0],
+                                  *_aval(d, 0)))
+                else:
+                    fired.append((seq["i"], idx, kind_name[d.kind[n]],
+                                  d.tag[n], *_aval(d, n)))
+            return cb
 
-                def mk(idx):
-                    def cb(d, n):
-                        if isinstance(d, CloseNode):
-                            fired.append((seq["i"], idx, "close",
-                                          d.tag[0], _aval(d, 0)))
-                        else:
-                            fired.append((seq["i"], idx,
-                                          kind_name[d.kind[n]], d.tag[n],
-                                          _aval(d, n)))
-                    return cb
+        # an unconditional tracker callback advances the event counter
+        # exactly once per node/close event; err events advance it
+        # inside the err callback
+        def tracker(d, n):
+            seq["i"] += 1
+        p.set_callback(tracker)
+        for idx, sel in enumerate(selectors):
+            if sel is None:
+                p.set_callback(mk(idx))
+            else:
+                p.set_callback(sel, mk(idx))
+        if with_err:
+            err_idx = len(selectors)
 
-                # an unconditional tracker callback advances the event
-                # counter exactly once per node/close event; err events
-                # advance it inside the err callback
-                def tracker(d, n):
-                    seq["i"] += 1
-                p.set_callback(tracker)
-                for idx, sel in enumerate(selectors):
-                    if sel is None:
-                        p.set_callback(mk(idx))
-                    else:
-                        p.set_callback(sel, mk(idx))
-                if with_err:
-                    err_idx = len(selectors)
+            def ecb(e, d, n):
+                seq["i"] += 1
+                fired.append((seq["i"], err_idx, "err", d.tag[n],
+                              *_aval(d, n)))
+            p.set_err_callback(ecb)
+        p.parse(html)
+        return fired
 
-                    def ecb(e, d, n):
-                        seq["i"] += 1
-                        fired.append((seq["i"], err_idx, "err", d.tag[n],
-                                      _aval(d, n)))
-                    p.set_err_callback(ecb)
-                p.parse(html)
-                for (s_, c_, k_, t_, a_) in fired:
-                    for k, v in zip(key_cols, row[:-1]):
-                        keys[k].append(v)
-                    seqs.append(s_)
-                    cbs.append(c_)
-                    kinds.append(k_)
-                    tags.append(t_)
-                    avals.append(a_)
-            out = {**keys, "event_seq": seqs, "cb_idx": cbs,
-                   "kind": kinds, "tag_name": tags}
-            if attr:
-                out[f"{attr}_attr"] = avals
-            yield pd.DataFrame(out)
-
-    return df.select(*key_cols, text_col).mapInPandas(fn, schema)
+    return flatmap_docs(df, fn, key_cols, fields, text_col=text_col)

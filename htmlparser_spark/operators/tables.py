@@ -11,9 +11,7 @@ parse kernel and adds no shuffle at any corpus size.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import pandas as pd
+from typing import Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -21,11 +19,11 @@ from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.parse import parse
 from ..htmldom.tables import extract_tables
+from ..kernel import flatmap_docs
 
 __all__ = ["extract_table_cells"]
 
@@ -45,24 +43,6 @@ def extract_table_cells(df: DataFrame,
     col_idx, is_header, cell_text) in document order. Documents
     without tables contribute no rows; NULL html contributes no rows.
     """
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _CELL_FIELDS)
-    keys = list(key_cols)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[keys + [text_col]].itertuples(index=False):
-                *kv, s = tup
-                if s is None:
-                    continue
-                for t_i, r_i, c_i, hdr, txt in extract_tables(parse(s)):
-                    rows.append((*kv, t_i, r_i, c_i, hdr, txt))
-            out = pd.DataFrame(
-                rows, columns=keys + ["table_idx", "row_idx", "col_idx",
-                                      "is_header", "cell_text"])
-            out = out.astype({"table_idx": "int32", "row_idx": "int32",
-                              "col_idx": "int32", "is_header": "bool"})
-            yield out
-
-    return df.select(*keys, text_col).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return flatmap_docs(df, lambda s: extract_tables(parse(s)), keys,
+                        _CELL_FIELDS, text_col=text_col)

@@ -29,9 +29,7 @@ fixpoint is exactly replayable in ANSI SQL — the driver oracle
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
-
-import pandas as pd
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -39,10 +37,10 @@ from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
-    StructType,
 )
 
 from ..htmldom.links import extract_links_fused
+from ..kernel import flatmap_docs
 
 __all__ = ["extract_doc_links", "pagerank", "anchor_text_index"]
 
@@ -64,32 +62,12 @@ def extract_doc_links(df: DataFrame,
     ``href_abs`` is RFC-3986 resolution of href against ``base_col``
     (NULL when no base column is given or the base is NULL). Pages
     without links and NULL html contribute no rows."""
-    key_fields = [f for f in df.schema.fields if f.name in key_cols]
-    schema = StructType(key_fields + _LINK_FIELDS)
-    keys = list(key_cols)
-    cols = keys + [text_col] + ([base_col] if base_col else [])
+    def fn(s, base=None):
+        return extract_links_fused(s, resolve_against=base)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for tup in pdf[cols].itertuples(index=False):
-                if base_col:
-                    *kv, s, base = tup
-                else:
-                    *kv, s = tup
-                    base = None
-                if s is None:
-                    continue
-                for idx, href, absu, text, nof in extract_links_fused(
-                        s, resolve_against=base):
-                    rows.append((*kv, idx, href, absu, text, nof))
-            out = pd.DataFrame(
-                rows, columns=keys + ["link_idx", "href", "href_abs",
-                                      "anchor_text", "nofollow"])
-            out = out.astype({"link_idx": "int32", "nofollow": "bool"})
-            yield out
-
-    return df.select(*cols).mapInPandas(fn, schema=schema)
+    keys = [f.name for f in df.schema.fields if f.name in key_cols]
+    return flatmap_docs(df, fn, keys, _LINK_FIELDS, text_col=text_col,
+                        arg_cols=(base_col,) if base_col else ())
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",

@@ -85,9 +85,9 @@ def codegen_stage_count(df: DataFrame) -> int:
 
 def assert_no_python_row_udf(df: DataFrame) -> None:
     """Assert the plan contains no row-at-a-time Python UDF
-    (BatchEvalPython). Arrow-batch ops (ArrowEvalPython / MapInPandas /
-    FlatMapGroupsInPandas) are the allowed Python surface — contract
-    from BASELINE.json input_hint ("no per-row Python")."""
+    (BatchEvalPython). Arrow-batch ops (ArrowEvalPython / MapInArrow /
+    MapInPandas / FlatMapGroupsInPandas) are the allowed Python surface
+    — contract from BASELINE.json input_hint ("no per-row Python")."""
     text = explain_string(df, "extended")
     assert "BatchEvalPython" not in text, (
         "plan contains a row-at-a-time Python UDF (BatchEvalPython)")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .kernel import explode_nodes, extract_text
+from .kernel import explode_nodes, extract_text, map_docs
 from .operators.extract import extract_transcripts
 from .operators.select import selector_count
 
@@ -177,20 +177,14 @@ def q_to_html_pretty(spark, sf_dir):
     """The third serializer (to_html pretty printer, html.cpp:325-392):
     indented block layout, inline single-text tags, rawtext verbatim.
     Oracle reconstructs the exact indented string in SQL."""
-    import pandas as pd
+    from pyspark.sql.types import StringType, StructField
 
     from .htmldom import parse, to_html
 
-    df = _docs_wrapped(spark, sf_dir)
-
-    def fn(batches):
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "pretty_html": [to_html(parse(s)) for s in pdf["text"]],
-            })
-
-    return df.mapInPandas(fn, "doc_id bigint, pretty_html string")
+    return map_docs(_docs_wrapped(spark, sf_dir),
+                    lambda s: (to_html(parse(s)),),
+                    [StructField("pretty_html", StringType())], (None,),
+                    drop_text=True)
 
 
 def q_selector_matches_li(spark, sf_dir):

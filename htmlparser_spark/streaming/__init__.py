@@ -1,8 +1,9 @@
 """Structured Streaming variant of the extraction pipeline.
 
-The parse kernel is a pure function of ``text`` packaged as
-``mapInPandas``, so the SAME kernel powers batch and streaming — no
-semantic drift between the two planes. What changes in streaming:
+The parse kernel is a pure function of ``text`` packaged as one
+``mapInArrow`` stage (``kernel.extract_text``), so the SAME kernel
+powers batch and streaming — no semantic drift between the two
+planes. What changes in streaming:
 
 - no global window-over-(conv_id, turn_idx): ``row_number`` needs the
   whole conversation, which an unbounded stream never has. Per-turn

@@ -18,7 +18,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import extract_result_schema, make_extract_fn
+from ..kernel import extract_text
 from ..sources.transcripts import TRANSCRIPTS_SCHEMA_DDL
 
 __all__ = [
@@ -204,12 +204,8 @@ def extract_stream(sdf: DataFrame, *, strip: bool = True,
     """The batch parse kernel applied to a streaming DataFrame —
     identical Arrow-batch function, so streaming output is byte-equal
     to the batch pipeline on the same rows."""
-    schema = extract_result_schema(
-        sdf.schema, include_raw=include_raw,
-        drop_cols=() if keep_text else ("text",))
-    fn = make_extract_fn(text_col="text", strip=strip,
-                         include_raw=include_raw, drop_text=not keep_text)
-    return sdf.mapInPandas(fn, schema)
+    return extract_text(sdf, text_col="text", strip=strip,
+                        include_raw=include_raw, drop_text=not keep_text)
 
 
 _CONV_STATE_SCHEMA = StructType([

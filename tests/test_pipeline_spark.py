@@ -179,26 +179,29 @@ def test_two_phase_ordering_equals_window(spark):
     assert got2 == exp
 
 
-def test_iceberg_reader_config_gated(spark):
+def test_iceberg_reader_config_gated(spark, tmp_path):
     """The --format iceberg branch must build its reader config and
     fail ONLY at jar resolution when iceberg-spark-runtime is absent
-    (skips cleanly there); with the jar on a real cluster the same
-    code path loads the table."""
+    (skips cleanly there); with the jar present, loading a table that
+    does not exist must fail with a table-not-found error."""
     import pytest
 
     reader = spark.read.format("iceberg")  # config construction works
     assert reader is not None
     try:
-        reader.load("/tmp/nonexistent-iceberg-table")
-        has_iceberg = True
+        reader.load(str(tmp_path / "no-such-table"))
     except Exception as ex:
         msg = str(ex)
         if ("Failed to find" in msg or "ClassNotFound" in msg
                 or "DATA_SOURCE_NOT_FOUND" in msg):
             pytest.skip("iceberg-spark-runtime jar not on classpath "
                         "(expected in this sandbox)")
-        has_iceberg = False  # jar present but table missing — fine too
-    assert True if has_iceberg else True
+        low = msg.lower()
+        assert ("nosuchtable" in low or "does not exist" in low
+                or "table_or_view_not_found" in low), msg
+    else:
+        pytest.fail("loading a nonexistent Iceberg table returned a "
+                    "DataFrame")
 
 
 def test_mega_text_roundtrip(spark):

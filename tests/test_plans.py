@@ -56,8 +56,11 @@ def test_partition_bucket_filter_pushdown(spark, tmp_path, docs):
 def test_pipeline_has_no_row_python_udf(spark, docs):
     df = extract_text(docs.select("doc_id", "text"), include_raw=False)
     assert_no_python_row_udf(df)
-    # and the Python that IS there is Arrow-batched
-    assert "MapInPandas" in explain_string(df, "extended")
+    # and the Python that IS there is Arrow-batched, with no pandas
+    # conversion on either side of the kernel
+    plan = explain_string(df, "extended")
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan
 
 
 def test_dedup_pipeline_plan_hygiene(spark, docs):
