@@ -15,7 +15,6 @@ Layout:
     operators/  extraction pipeline, selectors-as-DataFrames, dedup, ANN
     sources/    transcripts synthesizers (test-scale + distributed)
     functions/  column-level helpers (JVM-side expressions)
-    streaming/  Structured Streaming variant of the extraction pipeline
     plans/      plan-inspection helpers (pushdown/codegen assertions)
 
 Importing the package also makes ``importlib.invalidate_caches()``

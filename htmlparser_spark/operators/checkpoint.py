@@ -49,11 +49,10 @@ MANIFEST_SCHEMA = pa.schema([("partition_id", pa.int64()),
                              ("run_id", pa.string())])
 
 
-def with_partition_id(df: DataFrame, n_buckets: int,
-                      key_col: str = "conv_id") -> DataFrame:
+def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "partition_id",
-        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("long"))
+        F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("long"))
 
 
 def completed_ids(path: str) -> Optional[list]:
@@ -78,12 +77,12 @@ DRIVER_LISTING_MAX = 64
 
 def row_hash_expr(extra_cols=()):
     """The per-row lineage hash: xxhash64 over the identifying key and
-    the extracted payload. ONE definition shared by both lineage modes
-    and the streaming pipeline, so manifests are byte-comparable
-    across all of them. ``extra_cols`` extends the key for modes whose
-    output has several rows per turn (table cells, links) — without
-    them two identical items in one turn would XOR-cancel in the
-    bucket hash and a doubled/dropped pair would go unnoticed."""
+    the extracted payload. ONE definition shared by both lineage modes,
+    so their manifests are byte-comparable. ``extra_cols`` extends the
+    key for modes whose output has several rows per turn (table cells,
+    links) — without them two identical items in one turn would
+    XOR-cancel in the bucket hash and a doubled/dropped pair would go
+    unnoticed."""
     return F.xxhash64("conv_id", "turn_idx", *extra_cols,
                       "extracted_text")
 
@@ -205,9 +204,8 @@ def certify(spark: SparkSession, output_path: str, schema, run_id: str,
 
 def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                      manifest_path: str, n_buckets: int = 64,
-                     run_id: str = "run-0", key_col: str = "conv_id",
+                     run_id: str = "run-0",
                      extract_kwargs: Optional[dict] = None,
-                     cluster_write: bool = True,
                      max_buckets: Optional[int] = None,
                      lineage_mode: str = "full",
                      transform=None,
@@ -255,30 +253,17 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     columns as ``extra_hash_cols`` so the lineage hash stays
     row-unique (see row_hash_expr). The ordering fusion only applies
     to the default kernel path (a transform orders its own output)."""
-    import time
-
     from .extract import extract_transcripts
-
-    trace = os.environ.get("HTMLPARSER_TRACE") == "1"
-    marks = [("t0", time.time())]
-
-    def mark(name):
-        if trace:
-            marks.append((name, time.time()))
-            print(f"[trace] {name}: "
-                  f"{marks[-1][1] - marks[-2][1]:.1f}s", flush=True)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # fused ordering (default): the ordering window rides the bucket
     # write's exchange and sort (see cluster_buckets)
     ek = dict(extract_kwargs or {})
-    fuse_order = (transform is None
-                  and cluster_write and ek.get("order", True)
-                  and ek.get("order_impl", "window") == "window"
-                  and key_col == "conv_id")
+    fuse_order = (transform is None and ek.get("order", True)
+                  and ek.get("order_impl", "window") == "window")
     if fuse_order:
         ek["order"] = False
-    bucketed = with_partition_id(df, n_buckets, key_col)
+    bucketed = with_partition_id(df, n_buckets)
     done = completed_ids(manifest_path)
     todo = bucketed
     if done:
@@ -291,27 +276,22 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
         skip = set(done or ())
         undone = [b for b in range(n_buckets) if b not in skip][:max_buckets]
         todo = todo.filter(F.col("partition_id").isin(undone))
-    mark("resume")
     out = (transform(todo) if transform is not None
            else extract_transcripts(todo, **ek))
-    if cluster_write:
-        # cluster by bucket before the partitioned write: file count
-        # becomes n_buckets instead of write_tasks × n_buckets, and the
-        # dynamic-overwrite commit stays O(n_buckets) as the cluster
-        # grows. The sort makes each bucket file (conv_id, turn_idx)-
-        # sorted — deterministic layout, ordered consumer reads, better
-        # parquet encoding — and is the order the fused window needs.
-        out = cluster_buckets(out, n_buckets, extra_hash_cols,
-                              turn_seq=fuse_order)
+    # cluster by bucket before the partitioned write: file count
+    # becomes n_buckets instead of write_tasks × n_buckets, and the
+    # dynamic-overwrite commit stays O(n_buckets) as the cluster
+    # grows. The sort makes each bucket file (conv_id, turn_idx)-
+    # sorted — deterministic layout, ordered consumer reads, better
+    # parquet encoding — and is the order the fused window needs.
+    out = cluster_buckets(out, n_buckets, extra_hash_cols,
+                          turn_seq=fuse_order)
     if lineage_mode == "hash_col":
         out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
     out.write.mode("overwrite").partitionBy("partition_id") \
         .parquet(output_path)
-    mark("extract+write")
     rows = certify(spark, output_path, out.schema, run_id,
                    skip=done or (), lineage_mode=lineage_mode,
                    extra_cols=extra_hash_cols)
-    mark("lineage")
     append_manifest_rows(rows, manifest_path)
-    mark("manifest_append")
     return rows

@@ -59,9 +59,9 @@ __all__ = [
 def band_struct_cols(sig_col: str, num_perm: int, bands: int):
     """(band_id, band_hash) struct per LSH band, as JVM expressions
     over a signature array column: band_hash = xxhash64 of the band's
-    signature components. Shared by the batch candidate join, the
-    incremental index builder/prober, and the streaming band-state op,
-    so their buckets are bit-identical."""
+    signature components. Shared by the batch candidate join and the
+    incremental index builder/prober, so their buckets are
+    bit-identical."""
     rows_per_band = num_perm // bands
     return [
         F.struct(

@@ -137,14 +137,7 @@ def sessionize(events: DataFrame, by: str = "user_id", ts_col: str = "ts",
     time, tie-broken on ``order_tiebreak`` for determinism), a new
     session starts whenever the gap to the previous event exceeds
     ``gap_seconds``. Appends ``out`` (1-based long) — the classic
-    lag + cumulative-sum formulation, one shuffle, all codegen.
-
-    Structured Streaming note: the streaming twin of this operator is
-    ``F.session_window(ts_col, gap)`` in streaming/pipeline.py's
-    aggregation path; this batch form additionally labels every EVENT
-    with its session ordinal, which session_window (an aggregation)
-    cannot.
-    """
+    lag + cumulative-sum formulation, one shuffle, all codegen."""
     w = Window.partitionBy(by).orderBy(ts_col, order_tiebreak)
     prev = F.lag(F.col(ts_col)).over(w)
     new_sess = F.when(

@@ -41,14 +41,15 @@ LOCALFS_CLASS = "htmlparser_spark.jvm.NioLocalFileSystem"
 LOCALFS_SUBMIT_ARGS = ("--driver-class-path", str(LOCALFS_JAR),
                        "--jars", str(LOCALFS_JAR),
                        "--conf", f"spark.hadoop.fs.file.impl={LOCALFS_CLASS}")
+# rows per Arrow batch at the kernel boundary (see the module docstring)
+ARROW_MAX_RECORDS = 512
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def configure(builder: SparkSession.Builder,
-              arrow_max_records: int = 512) -> SparkSession.Builder:
+def configure(builder: SparkSession.Builder) -> SparkSession.Builder:
     """The session settings every entry point runs with (see the
     module docstring); the master is left to the caller."""
     return (
@@ -61,18 +62,17 @@ def configure(builder: SparkSession.Builder,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(arrow_max_records))
+                str(ARROW_MAX_RECORDS))
         .config("spark.sql.session.timeZone", "UTC")
     )
 
 
 def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
-              shuffle_partitions: int | None = None,
-              arrow_max_records: int = 512) -> SparkSession:
+              shuffle_partitions: int | None = None) -> SparkSession:
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     return (
-        configure(SparkSession.builder.appName(app), arrow_max_records)
+        configure(SparkSession.builder.appName(app))
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)

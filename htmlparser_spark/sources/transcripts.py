@@ -24,9 +24,8 @@ import datetime as _dt
 import random
 from typing import List, Tuple
 
-__all__ = ["generate_rows", "generate_pandas", "generate_spark_df",
-           "generate_distributed", "TRANSCRIPTS_SCHEMA_DDL",
-           "read_transcripts"]
+__all__ = ["generate_rows", "generate_spark_df", "generate_distributed",
+           "TRANSCRIPTS_SCHEMA_DDL", "read_transcripts"]
 
 TRANSCRIPTS_SCHEMA_DDL = ("conv_id string, turn_idx int, role string, "
                           "text string, tool string, ts timestamp")
@@ -149,15 +148,6 @@ def generate_rows(n_convs: int = 200, n_turns: int = 2000, seed: int = 42,
             global_turn += 1
     rng.shuffle(rows)
     return rows
-
-
-def generate_pandas(n_convs: int = 200, n_turns: int = 2000, seed: int = 42,
-                    mega_text: bool = True):
-    import pandas as pd
-
-    rows = generate_rows(n_convs, n_turns, seed, mega_text)
-    return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
 
 
 def generate_distributed(spark, n_turns: int, turns_per_conv: int = 40,

@@ -194,7 +194,6 @@ def main(argv=None) -> int:
         import shutil
         shutil.rmtree(args.checkpoint, ignore_errors=True)
 
-    t_setup = time.time()
     df = read_input(spark, args)
     # warm the Python workers (imports, Arrow setup) with a tiny kernel
     # pass so the reported wall measures steady-state throughput, not
@@ -207,8 +206,6 @@ def main(argv=None) -> int:
                  F.col("id").cast("string"), F.lit("</div>")).alias("text"))
     extract_text(warm, strip=True, include_raw=True).write \
         .format("noop").mode("overwrite").save()
-    if os.environ.get("HTMLPARSER_TRACE") == "1":
-        print(f"[trace] warmup: {time.time() - t_setup:.1f}s", flush=True)
     transform, extra = make_transform(args.mode)
     t0 = time.time()
     lineage = run_checkpointed(

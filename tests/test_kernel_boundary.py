@@ -387,49 +387,3 @@ def test_extract_doc_links(docs, base_col):
                s, resolve_against=base), ("doc_id", "ts"),
                (base_col,) if base_col else ()))
 
-
-# ---- the streaming plane -------------------------------------------
-
-@pytest.mark.parametrize("kw", [dict(), dict(include_raw=True,
-                                             keep_text=True)])
-def test_extract_stream(spark, docs, tmp_path, kw):
-    from pyspark.sql import functions as F
-
-    from htmlparser_spark.streaming import (
-        extract_stream,
-        read_transcripts_stream,
-    )
-
-    src = docs.select(F.col("doc_id").cast("string").alias("conv_id"),
-                      F.lit(0).alias("turn_idx"),
-                      F.lit("assistant").alias("role"), "text",
-                      F.lit(None).cast("string").alias("tool"), "ts")
-    src.write.parquet(str(tmp_path / "in"))
-    sdf = read_transcripts_stream(spark, str(tmp_path / "in"))
-    out = extract_stream(sdf, **kw)
-    raw = kw.get("include_raw", False)
-    keep = kw.get("keep_text", False)
-    fields = (_fields(("conv_id", S, True), ("turn_idx", I, True),
-                      ("role", S, True))
-              + ([TEXT] if keep else [])
-              + _fields(("tool", S, True), ("ts", TimestampType(), True),
-                        ("extracted_text", S, True))
-              + (_fields(("raw_html", S, True)) if raw else [])
-              + _fields(("n_nodes", I, True), ("n_errors", I, True)))
-    assert out.schema == StructType(fields)
-    name = "kernel_boundary_stream_" + ("raw" if raw else "plain")
-    q = (out.writeStream.format("memory").queryName(name)
-         .trigger(availableNow=True).start())
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
-
-    def fn(s):
-        ext, r, n, e = extract_fused(s, strip=True, want_raw=raw)
-        return (ext, r, n, e) if raw else (ext, n, e)
-
-    batch = spark.read.parquet(str(tmp_path / "in"))
-    assert _rows(spark.table(name)) == _map_replay(
-        batch, fn, (None, None, 0, 0) if raw else (None, 0, 0),
-        drop_text=not keep)

@@ -1,13 +1,12 @@
 """The package stays at the surface that is run.
 
 Every module under ``htmlparser_spark/`` must be reachable by imports
-from one of five roots: the spark-submit job (``jobs/extract.py``),
-the Structured Streaming variant of the job
-(``htmlparser_spark.streaming``), the registered queries
-(``__spark_entry__.py``), the plan-inspection helpers
-(``htmlparser_spark.plans``) and the benchmark (``perfbench/run.py``,
-which starts its sessions through ``htmlparser_spark.session``). A
-module nothing reaches is dead weight that tests alone keep alive.
+from one of four roots: the spark-submit job (``jobs/extract.py``),
+the registered queries (``__spark_entry__.py``), the plan-inspection
+helpers (``htmlparser_spark.plans``) and the benchmark
+(``perfbench/run.py``, which starts its sessions through
+``htmlparser_spark.session``). A module nothing reaches is dead weight
+that tests alone keep alive.
 
 The walk is static (``ast``): it follows module-level and
 function-local imports, relative imports, and the parent packages an
@@ -21,9 +20,8 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "htmlparser_spark"
-ROOTS = (ROOT / "jobs" / "extract.py", ROOT / PKG / "streaming" / "__init__.py",
-         ROOT / "__spark_entry__.py", ROOT / PKG / "plans" / "__init__.py",
-         ROOT / "perfbench" / "run.py")
+ROOTS = (ROOT / "jobs" / "extract.py", ROOT / "__spark_entry__.py",
+         ROOT / PKG / "plans" / "__init__.py", ROOT / "perfbench" / "run.py")
 
 
 def _module_name(path: Path) -> str:
