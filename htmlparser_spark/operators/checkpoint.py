@@ -215,6 +215,9 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     Returns the lineage rows of THIS run as a driver-side list of Rows
     (partition_id, n_rows, content_hash, run_id); empty if nothing to
     do. The list is bounded by n_buckets, so driver-side is safe.
+    Raises ``ValueError``, before anything is written, when the
+    manifest holds a bucket id ``>= n_buckets``: it was committed with
+    more buckets, and its ids would skip the wrong conversations.
 
     ``max_buckets`` commits at most that many (lowest-id) uncommitted
     buckets this run — the commit boundary a mid-job failure leaves
@@ -265,6 +268,14 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
         ek["order"] = False
     bucketed = with_partition_id(df, n_buckets)
     done = completed_ids(manifest_path)
+    if done and done[-1] >= n_buckets:
+        # bucket ids are pmod(hash, n_buckets): under another count the
+        # committed ids name other conversations
+        raise ValueError(
+            f"manifest {manifest_path} holds bucket id {done[-1]}, so it "
+            f"was committed with at least {done[-1] + 1} buckets; this run "
+            f"has n_buckets={n_buckets}. Resume with the manifest's "
+            f"bucket count, or start a new output and manifest.")
     todo = bucketed
     if done:
         # resume: committed buckets are a small driver-side list

@@ -14,11 +14,21 @@ Settings rationale (targets a multi-executor cluster; local[N] here):
   absent, three child processes per written bucket; the adapter sets
   them with a syscall. ``get_spark`` binds it and puts its jar on the
   driver class path, which the gateway's JVM launch honours; a
-  ``spark-submit`` of the job passes ``LOCALFS_SUBMIT_ARGS`` instead,
+  ``spark-submit`` of the job passes ``LOCAL_SUBMIT_ARGS`` instead,
   because there both settings come too late to bind the driver.
+- the driver JVM runs C1-only JIT (``DRIVER_JAVA_OPTIONS``): under
+  local[N] it is the executor too, and the tiered default's C2
+  compiler threads compete with the task threads and Python workers
+  over a process's first jobs, while the hot path is the Python
+  kernel (measured in BASELINE.md, "C1-only driver JIT"). ``get_spark``
+  sets it on the JVM it launches; the spark-submit line carries it in
+  ``LOCAL_SUBMIT_ARGS``, since the job's builder runs after the driver
+  JVM has started. Cluster executors keep the default: they are
+  long-lived, C2's case, and were not measured.
 
 ``configure`` holds the settings the spark-submit job and ``get_spark``
-share; ``get_spark`` adds the local master, its sizing and the adapter.
+share; ``get_spark`` adds the local master, its sizing, the adapter and
+the driver's JIT flag.
 """
 
 from __future__ import annotations
@@ -29,18 +39,21 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "configure", "default_parallelism", "LOCALFS_JAR",
-           "LOCALFS_CLASS", "LOCALFS_SUBMIT_ARGS"]
+           "LOCALFS_CLASS", "DRIVER_JAVA_OPTIONS", "LOCAL_SUBMIT_ARGS"]
 
 LOCALFS_JAR = Path(__file__).resolve().parent / "jvm" / "htmlparser-localfs.jar"
 LOCALFS_CLASS = "htmlparser_spark.jvm.NioLocalFileSystem"
+# C1-only JIT for the driver JVM (see the module docstring)
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 # spark-submit resolves --py-files and --jars through the file: system
 # before the job's builder runs, and Hadoop caches that instance, so the
 # binding and the driver class path go on the submit command; --jars
 # alone loads the class too late for that lookup, and ships it to the
-# executors
-LOCALFS_SUBMIT_ARGS = ("--driver-class-path", str(LOCALFS_JAR),
-                       "--jars", str(LOCALFS_JAR),
-                       "--conf", f"spark.hadoop.fs.file.impl={LOCALFS_CLASS}")
+# executors. The driver's JVM options, too, only act from the command.
+LOCAL_SUBMIT_ARGS = ("--driver-class-path", str(LOCALFS_JAR),
+                     "--jars", str(LOCALFS_JAR),
+                     "--conf", f"spark.hadoop.fs.file.impl={LOCALFS_CLASS}",
+                     "--driver-java-options", DRIVER_JAVA_OPTIONS)
 # rows per Arrow batch at the kernel boundary (see the module docstring)
 ARROW_MAX_RECORDS = 512
 
@@ -77,6 +90,7 @@ def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
         .config("spark.driver.extraClassPath", str(LOCALFS_JAR))
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .getOrCreate()

@@ -6,6 +6,7 @@ Usage:
         --driver-class-path htmlparser_spark/jvm/htmlparser-localfs.jar \
         --jars htmlparser_spark/jvm/htmlparser-localfs.jar \
         --conf spark.hadoop.fs.file.impl=htmlparser_spark.jvm.NioLocalFileSystem \
+        --driver-java-options -XX:TieredStopAtLevel=1 \
         jobs/extract.py \
         --input /path/transcripts --output /path/out \
         --checkpoint /path/manifest [--format parquet|iceberg] \
@@ -175,8 +176,8 @@ def main(argv=None) -> int:
     from htmlparser_spark.operators.checkpoint import run_checkpointed
     from htmlparser_spark.session import configure
 
-    # the master, the cluster sizing and the file: adapter come from
-    # spark-submit (the Usage line above)
+    # the master, the cluster sizing, the file: adapter and the driver's
+    # JIT flag come from spark-submit (the Usage line above)
     spark = configure(SparkSession.builder.appName("htmlparser-extract")) \
         .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

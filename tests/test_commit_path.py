@@ -14,7 +14,7 @@ from pathlib import Path
 import pytest
 
 from htmlparser_spark.operators import checkpoint as ck
-from htmlparser_spark.session import LOCALFS_JAR, LOCALFS_SUBMIT_ARGS
+from htmlparser_spark.session import LOCALFS_JAR, LOCAL_SUBMIT_ARGS
 from htmlparser_spark.sources.transcripts import generate_spark_df
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -95,7 +95,7 @@ def test_spark_submit_job_spawns_no_chmod(tmp_path):
                               "spark-submit"))
     proc = subprocess.run(
         [submit, "--master", "local[2]", "--driver-memory", "1g",
-         *LOCALFS_SUBMIT_ARGS, str(ROOT / "jobs" / "extract.py"),
+         *LOCAL_SUBMIT_ARGS, str(ROOT / "jobs" / "extract.py"),
          "--synthetic", "400", "--buckets", "8", "--output", str(out),
          "--checkpoint", str(man)],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=600)

@@ -9,6 +9,7 @@
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from htmlparser_spark.htmldom import parse, to_raw_html, to_text_stripped
@@ -126,6 +127,32 @@ def test_checkpoint_rerun_over_empty_buckets_keeps_output(spark, tmp_path):
     assert (sorted(os.listdir(out_dir)), sorted(os.listdir(man_dir))) \
         == before
     assert spark.read.parquet(out_dir).count() == 12
+
+
+def test_resume_with_fewer_buckets_than_manifest_raises(spark, tmp_path):
+    """A manifest committed at 8 buckets, resumed at 4: its ids 4-7 do
+    not exist under 4 buckets and 0-3 name other conversations, so the
+    run raises, naming both counts, and writes nothing (it used to
+    return [] and commit nothing, without an error)."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = generate_spark_df(spark, n_convs=40, n_turns=160, seed=5,
+                           mega_text=False)
+    l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=8,
+                          run_id="r1", extract_kwargs={"include_raw": False})
+    assert max(r.partition_id for r in l1) == 7
+
+    def tree():
+        return sorted((os.path.relpath(os.path.join(d, f), tmp_path),
+                       os.path.getsize(os.path.join(d, f)),
+                       os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for d, _, fs in os.walk(tmp_path) for f in fs)
+
+    before = tree()
+    with pytest.raises(ValueError, match=r"at least 8 buckets.*n_buckets=4"):
+        run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                         run_id="r2", extract_kwargs={"include_raw": False})
+    assert tree() == before
 
 
 def test_read_transcripts_json_csv_parquet(spark, tmp_path):

@@ -1,5 +1,6 @@
 """The session settings the spark-submit job and ``get_spark`` share,
-read off the configured builders; no Spark is started."""
+read off the configured builders; no Spark is started, except that the
+last test reads the shared test session's JVM."""
 
 import importlib.util
 import zipfile
@@ -8,8 +9,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import SparkSession
 
-from htmlparser_spark.session import (LOCALFS_JAR, LOCALFS_SUBMIT_ARGS,
-                                      configure, get_spark)
+from htmlparser_spark.session import (DRIVER_JAVA_OPTIONS, LOCALFS_JAR,
+                                      LOCAL_SUBMIT_ARGS, configure, get_spark)
 
 ADAPTER = ("spark.hadoop.fs.file.impl", "spark.driver.extraClassPath")
 
@@ -44,6 +45,19 @@ def _capture(monkeypatch):
     return seen
 
 
+def _job_builder_options(monkeypatch, tmp_path):
+    """The options jobs/extract.py's session builder is given."""
+    seen = _capture(monkeypatch)
+    path = Path(__file__).resolve().parent.parent / "jobs" / "extract.py"
+    spec = importlib.util.spec_from_file_location("job_extract", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    with pytest.raises(_Built):
+        job.main(["--synthetic", "10", "--output", str(tmp_path / "o"),
+                  "--checkpoint", str(tmp_path / "m")])
+    return seen
+
+
 def test_get_spark_binds_localfs_adapter(monkeypatch):
     """get_spark adds the local master and the file: adapter, whose jar
     ships the bound class, to the shared options."""
@@ -55,7 +69,7 @@ def test_get_spark_binds_localfs_adapter(monkeypatch):
     assert seen["spark.master"] == "local[2]"
     assert seen["spark.driver.extraClassPath"] == str(LOCALFS_JAR)
     impl = seen["spark.hadoop.fs.file.impl"]
-    assert f"spark.hadoop.fs.file.impl={impl}" in LOCALFS_SUBMIT_ARGS
+    assert f"spark.hadoop.fs.file.impl={impl}" in LOCAL_SUBMIT_ARGS
     with zipfile.ZipFile(LOCALFS_JAR) as jar:
         assert impl.replace(".", "/") + ".class" in jar.namelist()
 
@@ -63,15 +77,37 @@ def test_get_spark_binds_localfs_adapter(monkeypatch):
 def test_job_session_uses_shared_options(monkeypatch, tmp_path):
     """jobs/extract.py builds its session from ``configure`` and leaves
     the master and the file: adapter to spark-submit."""
-    seen = _capture(monkeypatch)
-    path = Path(__file__).resolve().parent.parent / "jobs" / "extract.py"
-    spec = importlib.util.spec_from_file_location("job_extract", path)
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
-    with pytest.raises(_Built):
-        job.main(["--synthetic", "10", "--output", str(tmp_path / "o"),
-                  "--checkpoint", str(tmp_path / "m")])
+    seen = _job_builder_options(monkeypatch, tmp_path)
     shared = configure(SparkSession.builder)._options
     assert {k: seen.get(k) for k in shared} == shared
     assert "spark.master" not in seen
     assert not set(ADAPTER) & set(seen)
+
+
+def test_get_spark_launches_c1_only_jit(monkeypatch):
+    """get_spark starts its driver JVM, the local executor, with C1-only
+    JIT, and the deploy line gives the submitted job's driver the same
+    flag."""
+    seen = _capture(monkeypatch)
+    with pytest.raises(_Built):
+        get_spark(cores=2)
+    assert DRIVER_JAVA_OPTIONS == "-XX:TieredStopAtLevel=1"
+    assert seen["spark.driver.extraJavaOptions"] == DRIVER_JAVA_OPTIONS
+    i = LOCAL_SUBMIT_ARGS.index("--driver-java-options")
+    assert LOCAL_SUBMIT_ARGS[i + 1] == DRIVER_JAVA_OPTIONS
+
+
+def test_job_session_sets_no_driver_java_options(monkeypatch, tmp_path):
+    """The job's builder runs inside the started driver JVM, where a
+    driver JVM option would do nothing; it comes from the deploy line."""
+    seen = _job_builder_options(monkeypatch, tmp_path)
+    assert seen and "spark.driver.extraJavaOptions" not in seen
+    assert "spark.driver.extraJavaOptions" not in \
+        configure(SparkSession.builder)._options
+
+
+def test_shared_session_jvm_runs_c1_only_jit(spark):
+    """The JVM get_spark launched was started with the flag."""
+    args = list(spark._jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments())
+    assert DRIVER_JAVA_OPTIONS in args, args
