@@ -29,7 +29,16 @@ bench:
 scaling:
 	python bench/scaling.py
 
+# the cold-start caches get_spark keeps outside the checkout
+# (htmlparser_spark/coldstart.py): pre-build them for an image or a CI
+# runner, or drop them
+cache:
+	python -c 'from htmlparser_spark.coldstart import prebuild; prebuild()'
+
+clean-cache:
+	rm -rf "$${XDG_CACHE_HOME:-$$HOME/.cache}/htmlparser_spark"
+
 clean:
 	rm -rf htmlparser_spark.zip build
 
-.PHONY: zip jar test bench scaling clean
+.PHONY: zip jar test bench scaling cache clean-cache clean

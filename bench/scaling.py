@@ -21,7 +21,7 @@ Protocol (BASELINE.md):
      write to parquet. Generation is NOT timed.
   2. `make zip`, then for each core count N of --cores (default 2, 8):
      spark-submit --master local[cores] --py-files htmlparser_spark.zip
-         <the deploy-line flags, session.LOCAL_SUBMIT_ARGS>
+         <the deploy-line flags and environment, session.deploy_line()>
          jobs/extract.py --input ... --output ... --checkpoint ...
      Time only the pipeline (the job prints wall + turns/sec for the
      checkpointed extract stage itself).
@@ -53,7 +53,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from htmlparser_spark.session import LOCAL_SUBMIT_ARGS  # noqa: E402
+from htmlparser_spark.session import deploy_line  # noqa: E402
 
 # ordering strategy for BOTH legs (same job at both sizes — the ratio
 # must compare identical plans). 'two_phase' avoids the per-conv
@@ -138,7 +138,8 @@ def run_at(cores: int, input_path: Path, workdir: Path, tag: str = "",
     if fresh:
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ck, ignore_errors=True)
-    env = dict(os.environ)
+    deploy_env, deploy_args = deploy_line()
+    env = {**os.environ, **deploy_env}
     env["PYTHONPATH"] = f"{REPO}{os.pathsep}" + env.get("PYTHONPATH", "")
     cmd = [
         SPARK_SUBMIT,
@@ -148,9 +149,10 @@ def run_at(cores: int, input_path: Path, workdir: Path, tag: str = "",
         # per-task working set and keeps pauses short
         "--driver-memory", "12g",
         "--py-files", str(REPO / "htmlparser_spark.zip"),
-        # the file: system adapter and the driver's C1-only JIT, as the
-        # README's deploy line sets them
-        *LOCAL_SUBMIT_ARGS,
+        # the file: system adapter, the driver's C1-only JIT and, once
+        # one exists, its class-data archive, as the README's deploy
+        # line sets them
+        *deploy_args,
         "--conf", f"spark.sql.shuffle.partitions={cores * 4}",
         "--conf", "spark.sql.adaptive.enabled=true",
         "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=16m",

@@ -12,7 +12,10 @@ Mechanism (SURVEY §3.2 stage 2/6):
   integrity, and duplicated work is detectable, not just avoidable.
 - Resume reads the committed bucket ids from the manifest on the
   driver (pyarrow; the manifest is ≤ n_buckets rows per run) and drops
-  their rows with a plain IN-filter. The parse kernel is a pure
+  their rows with a plain IN-filter. Each manifest row records the
+  bucket count it was committed under, and a run under another count
+  raises before writing: the same ids would name other conversations.
+  The parse kernel is a pure
   function of `text`, so re-running a bucket is idempotent by
   construction; output is written with partitionBy(partition_id) +
   dynamic partition overwrite, making bucket-level retries
@@ -39,14 +42,17 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["with_partition_id", "completed_ids", "lineage_rows",
-           "append_manifest_rows", "cluster_buckets", "certify",
-           "run_checkpointed", "row_hash_expr"]
+__all__ = ["with_partition_id", "completed_ids", "manifest_bucket_counts",
+           "lineage_rows", "append_manifest_rows", "cluster_buckets",
+           "certify", "run_checkpointed", "row_hash_expr"]
 
+# n_buckets: the bucket count the row was committed under (null in
+# manifests written before it was recorded)
 MANIFEST_SCHEMA = pa.schema([("partition_id", pa.int64()),
                              ("n_rows", pa.int64()),
                              ("content_hash", pa.int64()),
-                             ("run_id", pa.string())])
+                             ("run_id", pa.string()),
+                             ("n_buckets", pa.int64())])
 
 
 def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -65,6 +71,14 @@ def completed_ids(path: str) -> Optional[list]:
     ids = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
         .to_table(columns=["partition_id"]).column(0).to_pylist()
     return sorted(set(ids))
+
+
+def manifest_bucket_counts(path: str) -> set:
+    """The bucket counts the manifest's rows record (empty for a
+    manifest written before the count was recorded)."""
+    counts = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
+        .to_table(columns=["n_buckets"]).column(0).to_pylist()
+    return set(counts) - {None}
 
 
 ROW_HASH_COL = "row_hash"
@@ -102,15 +116,17 @@ def lineage_rows(out: DataFrame, run_id: str,
             .withColumn("run_id", F.lit(run_id)))
 
 
-def append_manifest_rows(rows, path: str) -> None:
-    """Driver-side manifest append (pyarrow, atomic rename). The
-    manifest is tiny (≤ n_buckets rows) — a Spark job here costs
-    seconds of scheduling for no work, and in production this commit
-    is an Iceberg metadata append, i.e. also a driver-side operation."""
+def append_manifest_rows(rows, path: str, n_buckets: int) -> None:
+    """Driver-side manifest append (pyarrow, atomic rename), each row
+    recording ``n_buckets``. The manifest is tiny (≤ n_buckets rows) — a
+    Spark job here costs seconds of scheduling for no work, and in
+    production this commit is an Iceberg metadata append, i.e. also a
+    driver-side operation."""
     if not rows:
         return
-    table = pa.Table.from_pylist([r.asDict() for r in rows],
-                                 schema=MANIFEST_SCHEMA)
+    table = pa.Table.from_pylist(
+        [{**r.asDict(), "n_buckets": n_buckets} for r in rows],
+        schema=MANIFEST_SCHEMA)
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}.parquet")
     pq.write_table(table, tmp)
@@ -216,8 +232,10 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     (partition_id, n_rows, content_hash, run_id); empty if nothing to
     do. The list is bounded by n_buckets, so driver-side is safe.
     Raises ``ValueError``, before anything is written, when the
-    manifest holds a bucket id ``>= n_buckets``: it was committed with
-    more buckets, and its ids would skip the wrong conversations.
+    manifest was committed under another bucket count: its ids would
+    skip the wrong conversations. The count is the one its rows record,
+    or, for a manifest written before counts were recorded, at least
+    its largest id + 1 (such a manifest resumes at its own count).
 
     ``max_buckets`` commits at most that many (lowest-id) uncommitted
     buckets this run — the commit boundary a mid-job failure leaves
@@ -276,6 +294,13 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
             f"was committed with at least {done[-1] + 1} buckets; this run "
             f"has n_buckets={n_buckets}. Resume with the manifest's "
             f"bucket count, or start a new output and manifest.")
+    counts = manifest_bucket_counts(manifest_path) if done else set()
+    if counts - {n_buckets}:
+        raise ValueError(
+            f"manifest {manifest_path} was committed with n_buckets="
+            f"{sorted(counts)}; this run has n_buckets={n_buckets}. Resume "
+            f"with the manifest's bucket count, or start a new output and "
+            f"manifest.")
     todo = bucketed
     if done:
         # resume: committed buckets are a small driver-side list
@@ -304,5 +329,5 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     rows = certify(spark, output_path, out.schema, run_id,
                    skip=done or (), lineage_mode=lineage_mode,
                    extra_cols=extra_hash_cols)
-    append_manifest_rows(rows, manifest_path)
+    append_manifest_rows(rows, manifest_path, n_buckets)
     return rows

@@ -13,6 +13,11 @@ Usage:
         [--buckets 64] [--no-resume] [--synthetic N_TURNS] \
         [--mode text|markdown|main_content|tables|links|meta]
 
+The flags before ``jobs/extract.py`` are ``session.deploy_line()``; once
+the driver's class-data archive exists it swaps in the archive's flags,
+class path jar and conf dir (``python -m htmlparser_spark.session``
+prints the line for a shell, README "Cold start").
+
 Reads the transcripts table (conv_id, turn_idx, role, text, tool, ts),
 runs salted-repartition → fused parse/extract kernel → stable turn
 ordering, writes bucket-partitioned output plus per-bucket lineage

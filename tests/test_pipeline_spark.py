@@ -9,6 +9,7 @@
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +17,7 @@ from htmlparser_spark.htmldom import parse, to_raw_html, to_text_stripped
 from htmlparser_spark.operators.checkpoint import (
     cluster_buckets,
     lineage_rows,
+    manifest_bucket_counts,
     run_checkpointed,
     with_partition_id,
 )
@@ -153,6 +155,62 @@ def test_resume_with_fewer_buckets_than_manifest_raises(spark, tmp_path):
         run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
                          run_id="r2", extract_kwargs={"include_raw": False})
     assert tree() == before
+
+
+def _tree(root):
+    return sorted((os.path.relpath(os.path.join(d, f), root),
+                   os.path.getsize(os.path.join(d, f)),
+                   os.stat(os.path.join(d, f)).st_mtime_ns)
+                  for d, _, fs in os.walk(root) for f in fs)
+
+
+def test_resume_with_more_buckets_than_manifest_raises(spark, tmp_path):
+    """40 conversations committed at 4 buckets, re-run at 8: every id
+    the manifest holds is below 8, so only the recorded count tells.
+    Without it the run committed buckets 4-7 again and left 241 rows
+    for 160 turns; it raises, naming both counts, and writes nothing."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = generate_spark_df(spark, n_convs=40, n_turns=160, seed=5,
+                           mega_text=False)
+    l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                          run_id="r1", extract_kwargs={"include_raw": False})
+    assert {r.partition_id for r in l1} == {0, 1, 2, 3}
+    assert manifest_bucket_counts(man_dir) == {4}
+
+    before = _tree(tmp_path)
+    with pytest.raises(ValueError,
+                       match=r"n_buckets=\[4\].*n_buckets=8"):
+        run_checkpointed(spark, df, out_dir, man_dir, n_buckets=8,
+                         run_id="r2", extract_kwargs={"include_raw": False})
+    assert _tree(tmp_path) == before
+    assert spark.read.parquet(out_dir).count() == 160
+
+
+def test_manifest_without_bucket_count_resumes_at_its_count(spark,
+                                                            tmp_path):
+    """A manifest written before the count was recorded (no n_buckets
+    column) still resumes at its own count: the committed buckets are
+    skipped and the rest complete the output."""
+    out_dir = str(tmp_path / "out")
+    man_dir = str(tmp_path / "manifest")
+    df = generate_spark_df(spark, n_convs=20, n_turns=80, seed=7,
+                           mega_text=False)
+    l1 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                          run_id="r1", max_buckets=2,
+                          extract_kwargs={"include_raw": False})
+    assert {r.partition_id for r in l1} == {0, 1}
+    for name in os.listdir(man_dir):
+        path = os.path.join(man_dir, name)
+        pq.write_table(pq.read_table(path).drop(["n_buckets"]), path)
+    assert manifest_bucket_counts(man_dir) == set()
+
+    l2 = run_checkpointed(spark, df, out_dir, man_dir, n_buckets=4,
+                          run_id="r2", extract_kwargs={"include_raw": False})
+    assert {r.partition_id for r in l2} == {2, 3}
+    final = spark.read.parquet(out_dir)
+    assert final.count() == 80
+    assert final.select("conv_id", "turn_idx").distinct().count() == 80
 
 
 def test_read_transcripts_json_csv_parquet(spark, tmp_path):

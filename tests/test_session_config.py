@@ -9,10 +9,14 @@ from pathlib import Path
 import pytest
 from pyspark.sql import SparkSession
 
+from htmlparser_spark import coldstart
 from htmlparser_spark.session import (DRIVER_JAVA_OPTIONS, LOCALFS_JAR,
-                                      LOCAL_SUBMIT_ARGS, configure, get_spark)
+                                      LOCAL_SUBMIT_ARGS, configure,
+                                      deploy_line, get_spark)
 
 ADAPTER = ("spark.hadoop.fs.file.impl", "spark.driver.extraClassPath")
+DAEMON = "spark.python.daemon.module"
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_configure_sets_shared_options():
@@ -60,17 +64,20 @@ def _job_builder_options(monkeypatch, tmp_path):
 
 def test_get_spark_binds_localfs_adapter(monkeypatch):
     """get_spark adds the local master and the file: adapter, whose jar
-    ships the bound class, to the shared options."""
+    ships the bound class, to the shared options. The class path jar is
+    the checkout's, or its byte-identical copy in the cold-start cache
+    when the driver runs with a class-data archive."""
     seen = _capture(monkeypatch)
     with pytest.raises(_Built):
         get_spark(cores=2)
     shared = configure(SparkSession.builder)._options
     assert {k: seen.get(k) for k in shared} == shared
     assert seen["spark.master"] == "local[2]"
-    assert seen["spark.driver.extraClassPath"] == str(LOCALFS_JAR)
+    class_path = Path(seen["spark.driver.extraClassPath"])
+    assert class_path.read_bytes() == LOCALFS_JAR.read_bytes()
     impl = seen["spark.hadoop.fs.file.impl"]
     assert f"spark.hadoop.fs.file.impl={impl}" in LOCAL_SUBMIT_ARGS
-    with zipfile.ZipFile(LOCALFS_JAR) as jar:
+    with zipfile.ZipFile(class_path) as jar:
         assert impl.replace(".", "/") + ".class" in jar.namelist()
 
 
@@ -111,3 +118,51 @@ def test_shared_session_jvm_runs_c1_only_jit(spark):
     args = list(spark._jvm.java.lang.management.ManagementFactory
                 .getRuntimeMXBean().getInputArguments())
     assert DRIVER_JAVA_OPTIONS in args, args
+
+
+def test_daemon_shim_only_in_get_spark(monkeypatch, tmp_path):
+    """get_spark names the compiled-pyspark daemon when its workers can
+    import the package. The deploy line, the job's builder and the
+    shared settings never do: a submitted job's package arrives by
+    --py-files after the daemon has started, and cluster executors
+    have no cache, so the daemon module would not import there."""
+    monkeypatch.chdir(REPO)
+    seen = _capture(monkeypatch)
+    with pytest.raises(_Built):
+        get_spark(cores=2)
+    assert seen[DAEMON] == "htmlparser_spark.pydaemon"
+    assert DAEMON not in _job_builder_options(monkeypatch, tmp_path)
+    assert DAEMON not in configure(SparkSession.builder)._options
+    env, args = deploy_line()
+    assert not any("daemon" in a for a in args)
+    assert not any("daemon" in k for k in env)
+
+
+def test_deploy_line_inert_without_archive(monkeypatch, tmp_path):
+    """With no archive in the cache the deploy line is LOCAL_SUBMIT_ARGS
+    as they are, and asks for no conf dir."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    assert deploy_line() == ({}, LOCAL_SUBMIT_ARGS)
+
+
+def test_deploy_line_takes_an_existing_archive(monkeypatch, tmp_path):
+    """Once an archive exists, the deploy line launches the driver the
+    way it was dumped: the conf dir and jar copy of the cache, and the
+    archive flags after the JIT flag."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    if coldstart.keeps_conf_dir():
+        pytest.skip("$SPARK_HOME/conf holds a setting: no archive is used")
+    key = coldstart.plan(LOCALFS_JAR, daemon=False).build.name.split(".")[0]
+    archive = tmp_path / "htmlparser_spark" / "cds" / f"{key}-8.jsa"
+    archive.write_bytes(coldstart.ARCHIVE_MAGIC + b"\0" * 4)
+    env, args = deploy_line()
+    assert env == {"SPARK_CONF_DIR":
+                   str(tmp_path / "htmlparser_spark" / "conf")}
+    copy = Path(args[args.index("--driver-class-path") + 1])
+    assert copy.parent == tmp_path / "htmlparser_spark" / "jars"
+    assert copy.read_bytes() == LOCALFS_JAR.read_bytes()
+    opts = args[args.index("--driver-java-options") + 1].split()
+    assert opts[:3] == [DRIVER_JAVA_OPTIONS,
+                        f"-XX:SharedArchiveFile={archive}", "-Xshare:auto"]
+    assert all(o.startswith("-Xlog:cds") for o in opts[3:])
