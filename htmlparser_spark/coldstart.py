@@ -24,9 +24,11 @@ missing, stale or corrupt one only costs the time it would have saved.
   truncated archive would crash the JVM, so one whose size differs is
   treated as missing. CDS messages go to ``cds.log`` in the cache, not
   to the console, where they would follow a job's last line.
-- ``pyspark/``: a ``.pyc``-only copy of ``$SPARK_HOME/python/lib/
-  pyspark.zip`` for the daemon module ``pydaemon``, which falls back to
-  Spark's zip by itself.
+  No archive is used when the cache path holds whitespace or quotes,
+  which the launcher would split the flags at.
+- ``pyspark/``: a copy of ``$SPARK_HOME/python/lib/pyspark.zip`` with
+  each module's ``.pyc`` beside its source, for the daemon module
+  ``pydaemon``, which falls back to Spark's zip by itself.
 """
 
 from __future__ import annotations
@@ -158,6 +160,10 @@ def _archive(cds: Path, key: str) -> Optional[Path]:
 def _driver_archive(jar: Path, build: bool):
     """(class path jar, archive flags, env, temp archive) for the
     driver JVM; None when no archive can be used or built."""
+    if any(c.isspace() or c in "\"'\\" for c in str(cache_dir())):
+        # the launcher splits SPARK_SUBMIT_OPTS and --driver-java-options
+        # at whitespace, and reads quotes: the flags name cache paths
+        return None
     conf = empty_conf_dir()
     if conf is None:
         return None
@@ -318,10 +324,11 @@ def _alive(pid: int) -> bool:
 
 
 def build_pyspark_zip(spark_zip: Path, dest: Path) -> None:
-    """Write a copy of ``spark_zip`` whose modules are bytecode only
-    (unchecked hash-based ``.pyc``, so the bytes do not depend on when
-    it was built) to ``dest``, through a temp file. Tracebacks keep the
-    module paths inside ``spark_zip``."""
+    """Write a copy of ``spark_zip`` that holds, beside every module's
+    source, its bytecode (unchecked hash-based ``.pyc``, so the bytes do
+    not depend on when it was built) to ``dest``, through a temp file.
+    zipimport takes the ``.pyc`` without reading the source, which stays
+    for tracebacks; they keep the module paths inside ``spark_zip``."""
     from importlib.util import MAGIC_NUMBER, source_hash
 
     dest.parent.mkdir(parents=True, exist_ok=True)
@@ -334,8 +341,8 @@ def build_pyspark_zip(spark_zip: Path, dest: Path) -> None:
             warnings.simplefilter("ignore")
             for info in src.infolist():
                 data = src.read(info)
+                out.writestr(info, data)
                 if not info.filename.endswith(".py"):
-                    out.writestr(info, data)
                     continue
                 code = compile(data, os.path.join(spark_zip, info.filename),
                                "exec", dont_inherit=True)

@@ -42,9 +42,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-__all__ = ["with_partition_id", "completed_ids", "manifest_bucket_counts",
-           "lineage_rows", "append_manifest_rows", "cluster_buckets",
-           "certify", "run_checkpointed", "row_hash_expr"]
+__all__ = ["with_partition_id", "completed_ids", "lineage_rows",
+           "append_manifest_rows", "cluster_buckets", "certify",
+           "run_checkpointed", "row_hash_expr"]
 
 # n_buckets: the bucket count the row was committed under (null in
 # manifests written before it was recorded)
@@ -61,24 +61,40 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
         F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("long"))
 
 
-def completed_ids(path: str) -> Optional[list]:
+def completed_ids(path: str, n_buckets: Optional[int] = None) \
+        -> Optional[list]:
     """Committed bucket ids, sorted (None = no manifest). Read on the
     driver with pyarrow, the way ``append_manifest_rows`` writes it:
     the manifest is tiny, and a Spark read of it costs three jobs
-    (listing, schema inference, collect) for no work."""
+    (listing, schema inference, collect) for no work.
+
+    With ``n_buckets``, raises ``ValueError`` when the manifest was
+    committed under another bucket count: the count its rows record,
+    or, for a manifest written before counts were recorded, at least
+    its largest id + 1 (such a manifest resumes at its own count)."""
     if not os.path.exists(path):
         return None
-    ids = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
-        .to_table(columns=["partition_id"]).column(0).to_pylist()
-    return sorted(set(ids))
-
-
-def manifest_bucket_counts(path: str) -> set:
-    """The bucket counts the manifest's rows record (empty for a
-    manifest written before the count was recorded)."""
-    counts = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
-        .to_table(columns=["n_buckets"]).column(0).to_pylist()
-    return set(counts) - {None}
+    table = pads.dataset(path, schema=MANIFEST_SCHEMA, format="parquet") \
+        .to_table(columns=["partition_id", "n_buckets"])
+    ids = sorted(set(table.column("partition_id").to_pylist()))
+    if n_buckets is None or not ids:
+        return ids
+    resume = ("Resume with the manifest's bucket count, or start a new "
+              "output and manifest.")
+    if ids[-1] >= n_buckets:
+        # bucket ids are pmod(hash, n_buckets): under another count the
+        # committed ids name other conversations
+        raise ValueError(
+            f"manifest {path} holds bucket id {ids[-1]}, so it was "
+            f"committed with at least {ids[-1] + 1} buckets; this run has "
+            f"n_buckets={n_buckets}. {resume}")
+    counts = set(table.column("n_buckets").to_pylist()) - {None}
+    if counts - {n_buckets}:
+        raise ValueError(
+            f"manifest {path} was committed with n_buckets="
+            f"{sorted(counts)}; this run has n_buckets={n_buckets}. "
+            f"{resume}")
+    return ids
 
 
 ROW_HASH_COL = "row_hash"
@@ -233,9 +249,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     do. The list is bounded by n_buckets, so driver-side is safe.
     Raises ``ValueError``, before anything is written, when the
     manifest was committed under another bucket count: its ids would
-    skip the wrong conversations. The count is the one its rows record,
-    or, for a manifest written before counts were recorded, at least
-    its largest id + 1 (such a manifest resumes at its own count).
+    skip the wrong conversations (see ``completed_ids``).
 
     ``max_buckets`` commits at most that many (lowest-id) uncommitted
     buckets this run — the commit boundary a mid-job failure leaves
@@ -285,22 +299,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     if fuse_order:
         ek["order"] = False
     bucketed = with_partition_id(df, n_buckets)
-    done = completed_ids(manifest_path)
-    if done and done[-1] >= n_buckets:
-        # bucket ids are pmod(hash, n_buckets): under another count the
-        # committed ids name other conversations
-        raise ValueError(
-            f"manifest {manifest_path} holds bucket id {done[-1]}, so it "
-            f"was committed with at least {done[-1] + 1} buckets; this run "
-            f"has n_buckets={n_buckets}. Resume with the manifest's "
-            f"bucket count, or start a new output and manifest.")
-    counts = manifest_bucket_counts(manifest_path) if done else set()
-    if counts - {n_buckets}:
-        raise ValueError(
-            f"manifest {manifest_path} was committed with n_buckets="
-            f"{sorted(counts)}; this run has n_buckets={n_buckets}. Resume "
-            f"with the manifest's bucket count, or start a new output and "
-            f"manifest.")
+    done = completed_ids(manifest_path, n_buckets)
     todo = bucketed
     if done:
         # resume: committed buckets are a small driver-side list

@@ -6,8 +6,8 @@ named by ``spark.python.daemon.module``, with Spark's own
 sources only, so every session's daemon compiles the pyspark modules it
 imports again (``pyspark.daemon`` and ``pyspark.worker``: 1.3-1.5 s,
 against 0.5 s from bytecode, on a 4-core VM). ``get_spark`` builds a
-``.pyc``-only copy of the zip in the cache (``coldstart``) and names this
-module as the daemon. It puts the copy first on ``sys.path`` and runs
+copy of the zip with each module's ``.pyc`` beside its source in the
+cache (``coldstart``) and names this module as the daemon. It puts the copy first on ``sys.path`` and runs
 ``pyspark.daemon.manager()``; the forked workers inherit the imports.
 
 The copy is found by this interpreter's ``sys.implementation.cache_tag``

@@ -2,9 +2,10 @@
 starts, and its kernel output is byte-identical, with the driver
 archive missing, truncated or stale, with the compiled pyspark zip
 missing or built by another interpreter, and with a real conf dir
-(no archive then); two checkouts share one archive. Each case runs one fresh session in a child process
-(``tests/tools/cold_session.py``) over a cache in a temp directory;
-JVM messages about the archive must stay off its console."""
+(no archive then), and over a cache path with a space in it; two
+checkouts share one archive. Each case runs one fresh session in a
+child process (``tests/tools/cold_session.py``) over a cache in a temp
+directory; JVM messages about the archive must stay off its console."""
 
 import json
 import os
@@ -198,3 +199,16 @@ def test_real_conf_dir_turns_the_archive_off(cache, tmp_path):
     assert out["conf_probe"] == "on"
     assert out["archive_flags"] == []
     assert out["class_path_jar"] == str(LOCALFS_JAR)
+
+
+def test_cache_path_with_space_starts_without_archive(tmp_path):
+    """The launcher splits the JVM options at whitespace, so a cache
+    path with a space in it gets no archive flags; the session starts
+    on the checkout's jar and its daemon still imports the compiled
+    zip, a sys.path entry."""
+    cache = tmp_path / "with space"
+    out = _session(cache)
+    assert out["archive_flags"] == []
+    assert out["class_path_jar"] == str(LOCALFS_JAR)
+    assert out["pyspark"].startswith(str(cache))
+    assert _archives(cache) == []
