@@ -23,6 +23,11 @@ $(JAR): $(JAR_SRC)
 test:
 	python -m pytest tests/ -x -q
 
+# the Tier-1 command of ROADMAP.md, word for word: every test, the CPU
+# count and the Spark scratch directory it runs with
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
 bench:
 	python3 perfbench/run.py --workload chat_text --seed 1 --seconds 3
 
@@ -41,4 +46,4 @@ clean-cache:
 clean:
 	rm -rf htmlparser_spark.zip build
 
-.PHONY: zip jar test bench scaling cache clean-cache clean
+.PHONY: zip jar test tier1 bench scaling cache clean-cache clean

@@ -370,7 +370,7 @@ clock domain. Spark efficiency relative to that ceiling:
 
 Cross-size correctness: lineage manifests of the two runs agree
 bucket-by-bucket on (partition_id, n_rows, content_hash): **{ok}** —
-byte-identical extraction output at both parallelism levels.
+the same rows and content hashes at both parallelism levels.
 {_kr_section(kr)}
 Reproduce: `make scaling` (flags: --turns, --cores; env:
 SCALING_EXTRA_ARGS, SCALING_KILL_RESUME=0 to skip failure injection).

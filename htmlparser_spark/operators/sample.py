@@ -22,6 +22,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,7 +32,7 @@ from .text_stats import token_count_col
 __all__ = ["hash_u32_col", "sample_by_hash", "pack_sequences",
            "take_token_budget", "seeded_shuffle",
            "quality_budget_select",
-           "mixture_schedule", "dsir_weights"]
+           "global_rank", "mixture_schedule", "dsir_weights"]
 
 
 def hash_u32_col(key: Column, salt: str = "") -> Column:
@@ -188,6 +190,47 @@ def quality_budget_select(df: DataFrame, score_col: str, budget: int,
                       "n_tokens", "cum_tokens")
 
 
+def global_rank(df: DataFrame, order_cols: Sequence[str],
+                out: str = "rank",
+                num_partitions: int | None = None) -> DataFrame:
+    """Global 1-based rank over ``order_cols`` WITHOUT the
+    single-partition window `row_number() over (ORDER BY …)` plans —
+    the reusable form of the transcripts two-phase ordering trick:
+
+    1. ``repartitionByRange`` on the sort keys (sampled boundaries —
+       the terasort exchange; equal keys land in one partition);
+    2. per-partition local rank (window partitioned by
+       ``spark_partition_id()`` — parallel, no global sort task);
+    3. add each partition's row-count prefix offset (a driver-side
+       cumulative over ≤ num_partitions counts — bounded metadata,
+       same class as the checkpoint manifest read).
+
+    Exact iff ``order_cols`` is a TOTAL order (append a unique id as
+    the last key; ties split across range-partition boundaries would
+    otherwise make ranks partitioning-dependent). Every stage is
+    codegen; rows carry only the caller's columns."""
+    cols = [F.col(c) for c in order_cols]
+    parts = num_partitions or df.sparkSession.sparkContext \
+        .defaultParallelism
+    ranged = df.repartitionByRange(parts, *cols)
+    pid = F.spark_partition_id().alias("_pid")
+    base = ranged.withColumn("_pid", pid)
+    counts = {r._pid: r.n for r in
+              base.groupBy("_pid").agg(F.count("*").alias("n"))
+              .collect()}
+    offs, acc = {}, 0
+    for p in sorted(counts):
+        offs[p] = acc
+        acc += counts[p]
+    off_df = df.sparkSession.createDataFrame(
+        [(p, o) for p, o in offs.items()], "_pid int, _off long")
+    w = Window.partitionBy("_pid").orderBy(*cols)
+    return (base.join(F.broadcast(off_df), "_pid")
+            .withColumn(out, (F.col("_off")
+                              + F.row_number().over(w)).cast("long"))
+            .drop("_pid", "_off"))
+
+
 def mixture_schedule(df: DataFrame, weights: DataFrame,
                      topic_col: str = "topic", id_col: str = "doc_id",
                      seed: str = "7", weight_col: str = "weight_ppm",
@@ -207,7 +250,7 @@ def mixture_schedule(df: DataFrame, weights: DataFrame,
     (range-partitioned terasort, same as seeded_shuffle): writers
     consume order, not ordinals, so no global-rank window exists.
     ``with_pos=True`` additionally materializes the 1-based ordinal
-    via the two-phase ``relational.global_rank`` (range partition +
+    via the two-phase ``global_rank`` (range partition +
     local rank + bounded offsets) — still no single-partition
     window."""
     h = F.md5(F.encode(F.concat(F.col(id_col).cast("string"),
@@ -227,7 +270,6 @@ def mixture_schedule(df: DataFrame, weights: DataFrame,
                        F.col("_vt").alias("vt")) \
         .orderBy("vt", topic_col, "k")
     if with_pos:
-        from .relational import global_rank
         out = global_rank(out, ["vt", topic_col, "k"], out="pos")
     return out
 

@@ -229,164 +229,6 @@ def _word_match_sql(word: str) -> str:
 
 
 # ---------------------------------------------------------------- #
-# orchestration / relational queries                                #
-# ---------------------------------------------------------------- #
-
-def q_events_order(spark, sf_dir):
-    """Stable-ordering machinery shared with the transcripts pipeline."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select("event_id", "user_id",
-                     F.row_number().over(w).cast("long").alias("rn"))
-
-
-def q_events_stats(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    # timestamps are TIMESTAMP_NTZ; format as strings so the comparison
-    # is timezone-independent on both engines
-    fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return (ev.groupBy("event_type")
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 F.countDistinct("user_id").cast("long").alias("n_users"),
-                 F.date_format(F.min("ts"), fmt).alias("first_ts"),
-                 F.date_format(F.max("ts"), fmt).alias("last_ts")))
-
-
-def q_events_rolling(spark, sf_dir):
-    """Time-interval rolling aggregate — the RANGE-frame window type
-    (frame = value interval, not row count): per user, the sum and
-    count of events in the trailing hour. Values snap to integer
-    cents and timestamps to epoch seconds so both engines compute the
-    identical frame and sum."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.unix_timestamp("ts").cast("long")
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    base = ev.select("event_id", "user_id", sec.alias("sec"),
-                     cents.alias("cents"))
-    w = (Window.partitionBy("user_id").orderBy("sec")
-         .rangeBetween(-3600, 0))
-    return base.select(
-        "event_id", "user_id", "sec",
-        F.sum("cents").over(w).cast("long").alias("roll_cents"),
-        F.count("*").over(w).cast("long").alias("roll_n"))
-
-
-def q_events_setops(spark, sf_dir):
-    """Set operations (§2.4): users who clicked but never purchased
-    (EXCEPT), did both (INTERSECT), and did either (UNION DISTINCT) —
-    tagged and unioned into one deterministic result."""
-    ev = load(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click") \
-        .select("user_id").distinct()
-    buys = ev.filter(F.col("event_type") == "purchase") \
-        .select("user_id").distinct()
-    tag = lambda df, t: df.withColumn("op", F.lit(t))  # noqa: E731
-    return (tag(clicks.subtract(buys), "click_only")
-            .unionAll(tag(clicks.intersect(buys), "both"))
-            .unionAll(tag(clicks.union(buys).distinct(), "either")))
-
-
-def q_orders_rollup(spark, sf_dir):
-    """ROLLUP aggregation (grouping sets): order counts and total
-    price by (segment, priority), by segment, and grand total, with
-    grouping_id distinguishing the levels — integer cents keep the
-    sums exact across engines."""
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer") \
-        .select("c_custkey", "c_mktsegment")
-    j = orders.join(F.broadcast(cust),
-                    orders["o_custkey"] == cust["c_custkey"])
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    return (j.withColumn("cents", cents)
-            .rollup("c_mktsegment", "o_orderpriority")
-            .agg(F.count("*").cast("long").alias("n_orders"),
-                 F.sum("cents").cast("long").alias("sum_cents"),
-                 F.grouping_id().cast("long").alias("gid")))
-
-
-def q_bucketed_join(spark, sf_dir):
-    """Catalog-bucketed co-located join (operators/bucketed.py:44):
-    orders and customer are written ONCE as bucketBy(8, custkey)
-    sortBy external tables — the persisted clustering a 100-TB corpus
-    reuses across every downstream join — then sort-merge-joined. The
-    wrapper ASSERTS the join plan contains no Exchange on either side
-    (so this driver row certifies the shuffle elimination itself, not
-    just values) and returns the per-segment rollup; the oracle
-    replays the same join over the original parquet, pinning that
-    bucketing is value-invisible."""
-    import os
-    import tempfile
-
-    from .operators.bucketed import write_bucketed
-    from .plans.inspect import explain_string
-    base = tempfile.mkdtemp(prefix="bktq_")
-    orders = load(spark, sf_dir, "orders") \
-        .select(F.col("o_custkey").alias("custkey"), "o_orderkey")
-    cust = load(spark, sf_dir, "customer") \
-        .select(F.col("c_custkey").alias("custkey"), "c_mktsegment")
-    lspec = write_bucketed(orders, "bktq_orders",
-                           os.path.join(base, "o"), "custkey", 8)
-    rspec = write_bucketed(cust, "bktq_customer",
-                           os.path.join(base, "c"), "custkey", 8)
-    lt = spark.table(lspec["table"])
-    rt = spark.table(rspec["table"])
-    # merge hint: pin the sort-merge strategy regardless of the small
-    # side's size so the co-location (not a broadcast) is what the
-    # plan exercises
-    joined = lt.hint("merge").join(rt, "custkey")
-    plan = explain_string(joined)
-    assert "Exchange" not in plan, \
-        "bucketed join planned a shuffle:\n" + plan
-    return (joined.groupBy("c_mktsegment")
-            .agg(F.count("*").cast("long").alias("n_orders"),
-                 F.sum("o_orderkey").cast("long").alias("sum_okey")))
-
-
-def q_events_pivot(spark, sf_dir):
-    """Pivot/crosstab: per-user event counts spread across event-type
-    columns (explicit value list, so the plan is ONE aggregate pass —
-    no second distinct-values job) plus integer total cents."""
-    ev = load(spark, sf_dir, "events")
-    types = ["click", "view", "purchase", "signup", "error"]
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    return (ev.withColumn("cents", cents)
-            .groupBy("user_id")
-            .pivot("event_type", types)
-            .agg(F.count(F.lit(1)).cast("long"))
-            .na.fill(0, types)
-            .join(ev.withColumn("cents", cents).groupBy("user_id")
-                  .agg(F.sum("cents").cast("long").alias("sum_cents")),
-                  "user_id"))
-
-
-def q_lineitem_pricing(spark, sf_dir):
-    """TPC-H-Q1-shaped pricing summary: pushdown date filter + grouped
-    aggregation + sort. Aggregates chosen to be summation-order-exact
-    (integer-valued sums, counts, min/max) so the cross-engine value
-    hash can never flip on a double ulp."""
-    li = load(spark, sf_dir, "lineitem")
-    return (li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum("l_quantity").cast("long").alias("sum_qty"),
-                 F.count("*").cast("long").alias("count_order"),
-                 F.min("l_extendedprice").alias("min_price"),
-                 F.max("l_extendedprice").alias("max_price"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
-def q_orders_by_segment(spark, sf_dir):
-    """Broadcast join (small dim) + aggregation."""
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    j = orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey, "inner")
-    return (j.groupBy("c_mktsegment")
-            .agg(F.count("*").cast("long").alias("n_orders"),
-                 F.min("o_orderkey").cast("long").alias("min_order"),
-                 F.max("o_orderkey").cast("long").alias("max_order")))
-
-
-# ---------------------------------------------------------------- #
 # training-data pipeline ops                                        #
 # ---------------------------------------------------------------- #
 
@@ -1140,28 +982,6 @@ ORACLES = {
         "CAST(row_number() OVER (PARTITION BY doc_id % 50 "
         "ORDER BY doc_id // 50) AS BIGINT) AS turn_seq, "
         "text AS extracted_text FROM documents",
-    "lineitem_pricing":
-        "SELECT l_returnflag, l_linestatus, "
-        "CAST(sum(l_quantity) AS BIGINT) AS sum_qty, "
-        "count(*) AS count_order, min(l_extendedprice) AS min_price, "
-        "max(l_extendedprice) AS max_price FROM lineitem "
-        "WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' "
-        "GROUP BY l_returnflag, l_linestatus "
-        "ORDER BY l_returnflag, l_linestatus",
-    "events_order":
-        "SELECT event_id, user_id, CAST(row_number() OVER (PARTITION BY "
-        "user_id ORDER BY ts, event_id) AS BIGINT) AS rn FROM events",
-    "events_stats":
-        "SELECT event_type, count(*) AS n_events, "
-        "count(DISTINCT user_id) AS n_users, "
-        "strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_ts, "
-        "strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_ts "
-        "FROM events GROUP BY event_type",
-    "orders_by_segment":
-        "SELECT c_mktsegment, count(*) AS n_orders, "
-        "min(o_orderkey) AS min_order, max(o_orderkey) AS max_order "
-        "FROM orders JOIN customer ON o_custkey = c_custkey "
-        "GROUP BY c_mktsegment",
     "dedup_exact":
         "WITH dupped AS (SELECT doc_id, text FROM documents UNION ALL "
         "SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0) "
@@ -1544,12 +1364,9 @@ ORACLES["paragraph_dedup"] = (
     "FROM src s LEFT JOIN agg a ON s.doc_id = a.doc_id")
 
 # ---------------------------------------------------------------- #
-# round 3 additions: time-relational ops, vocab/classifier, fuzzy    #
+# round 3 additions: length percentiles, vocab/classifier, fuzzy     #
 # dedup end-to-end                                                   #
 # ---------------------------------------------------------------- #
-
-_TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
 
 def q_source_length_percentiles(spark, sf_dir):
     """Per-source corpus length distribution: EXACT p50/p90/p99 of
@@ -1570,64 +1387,6 @@ def q_source_length_percentiles(spark, sf_dir):
         "source", "n_docs",
         *[F.round(F.col("q")[i] * 100, 0).cast("long").alias(name)
           for i, name in enumerate(("p50_c", "p90_c", "p99_c"))])
-
-
-def q_events_range_join(spark, sf_dir):
-    """Bucketized interval join (relational.py:range_join): per user,
-    three deterministic windows anchored at the user's first event —
-    [lo, lo+1h), [lo+2h, lo+3h), and a deliberately GIANT
-    [lo, lo+1e8s) whose span exceeds max_buckets_per_interval=16, so
-    the driver row exercises BOTH arms: the exploded-bucket equi-join
-    for narrow intervals and the broadcast wide-interval fallback.
-    The oracle replays the same join as a plain non-equi join, which
-    DuckDB can afford at oracle scale."""
-    from .operators.relational import range_join
-    ev = load(spark, sf_dir, "events") \
-        .select("user_id", "event_id",
-                F.col("ts").cast("timestamp").cast("long").alias("te"))
-    base = ev.groupBy("user_id").agg(F.min("te").alias("lo0"))
-    iv = base.selectExpr(
-        "user_id",
-        "stack(3, "
-        " 0L, lo0, lo0 + 3600L,"
-        " 1L, lo0 + 7200L, lo0 + 10800L,"
-        " 2L, lo0, lo0 + 100000000L) AS (iid, lo, hi)")
-    j = range_join(ev, iv, point_col="te", lo_col="lo", hi_col="hi",
-                   by=["user_id"], bucket=3600,
-                   max_buckets_per_interval=16)
-    return j.groupBy("user_id", "iid").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum("event_id").cast("long").alias("sum_eid"))
-
-
-def q_events_asof(spark, sf_dir):
-    """Distributed as-of join: each click picks up the most recent
-    purchase value for the same user (union + running-last, one
-    shuffle). Oracle: DuckDB's native ASOF LEFT JOIN. The right side
-    is pre-aggregated to unique (user_id, ts) so the at-tie pick is
-    deterministic on both engines."""
-    from .operators.relational import asof_join
-    ev = load(spark, sf_dir, "events")
-    left = ev.filter(F.col("event_type") == "click") \
-        .select("event_id", "user_id", "ts")
-    right = ev.filter(F.col("event_type") == "purchase") \
-        .groupBy("user_id", "ts").agg(F.max("value").alias("pvalue"))
-    j = asof_join(left, right, on="ts", by=["user_id"])
-    return j.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT).alias("ts_s"),
-        F.col("pvalue_r"),
-        F.date_format("ts_r", _TS_FMT).alias("matched_ts"))
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (30-min gap): lag + cumulative sum,
-    one shuffle. Gaps compared on floor-of-epoch-seconds so Spark and
-    DuckDB agree exactly on microsecond timestamps."""
-    from .operators.relational import sessionize
-    ev = load(spark, sf_dir, "events")
-    return sessionize(ev, gap_seconds=1800) \
-        .select("event_id", "user_id", "session_idx")
 
 
 def q_vocab_topk(spark, sf_dir):
@@ -3359,17 +3118,11 @@ QUERIES = {
     "inverted_index": q_inverted_index,
     "image_decode_jpeg": q_image_decode_jpeg,   # new in round 5
     "image_decode_jpeg_progressive": q_image_decode_jpeg_progressive,
-    "bucketed_join": q_bucketed_join,           # new in round 5
     "image_decode_png_variants": q_image_decode_png_variants,
-    "events_range_join": q_events_range_join,  # new in round 5
     "source_length_percentiles": q_source_length_percentiles,
     "image_decode_png": q_image_decode_png,
     "dataset_split": q_dataset_split,
-    "events_pivot": q_events_pivot,
-    "events_rolling": q_events_rolling,
-    "events_setops": q_events_setops,
     "mixture_schedule": q_mixture_schedule,
-    "orders_rollup": q_orders_rollup,
     "quality_budget": q_quality_budget,
     "topic_mix": q_topic_mix,
     "vocab_topk": q_vocab_topk,
@@ -3446,10 +3199,6 @@ QUERIES = {
     "to_html_pretty": q_to_html_pretty,
     "exploded_nodes": q_exploded_nodes,
     "transcripts_e2e": q_transcripts_e2e,
-    "events_order": q_events_order,
-    "lineitem_pricing": q_lineitem_pricing,
-    "events_stats": q_events_stats,
-    "orders_by_segment": q_orders_by_segment,
     "dedup_exact": q_dedup_exact,
     "token_count": q_token_count,
     "bpe_token_count": q_bpe_token_count,
@@ -3477,8 +3226,6 @@ QUERIES = {
     "domain_budget_sample": q_domain_budget_sample,
     "decontam_ngrams": q_decontam_ngrams,
     "paragraph_dedup": q_paragraph_dedup,
-    "events_asof": q_events_asof,
-    "sessionize": q_sessionize,
     "seeded_shuffle": q_seeded_shuffle,
     "length_quantiles": q_length_quantiles,
     "tfidf_topk": q_tfidf_topk,
@@ -3535,45 +3282,6 @@ ORACLES["source_length_percentiles"] = (
     "CAST(round(quantile_cont(length(text), 0.99) * 100) AS BIGINT) "
     "  AS p99_c "
     "FROM documents GROUP BY source")
-
-# plain non-equi replay of the bucketized range join (both arms)
-ORACLES["events_range_join"] = (
-    "WITH e AS (SELECT user_id, event_id, "
-    "  CAST(epoch(ts) AS BIGINT) AS te FROM events), "
-    "b AS (SELECT user_id, min(te) AS lo0 FROM e GROUP BY user_id), "
-    "iv AS ("
-    "  SELECT user_id, 0 AS iid, lo0 AS lo, lo0 + 3600 AS hi FROM b "
-    "  UNION ALL SELECT user_id, 1, lo0 + 7200, lo0 + 10800 FROM b "
-    "  UNION ALL SELECT user_id, 2, lo0, lo0 + 100000000 FROM b) "
-    "SELECT iv.user_id, CAST(iid AS BIGINT) AS iid, "
-    "CAST(count(*) AS BIGINT) AS n_events, "
-    "CAST(sum(e.event_id) AS BIGINT) AS sum_eid "
-    "FROM iv JOIN e ON e.user_id = iv.user_id "
-    "AND e.te >= iv.lo AND e.te < iv.hi "
-    "GROUP BY 1, 2")
-
-ORACLES["events_asof"] = (
-    "WITH l AS (SELECT event_id, user_id, ts FROM events "
-    "  WHERE event_type = 'click'), "
-    "r AS (SELECT user_id, ts, max(value) AS pvalue FROM events "
-    "  WHERE event_type = 'purchase' GROUP BY user_id, ts) "
-    "SELECT l.event_id, l.user_id, "
-    "strftime(l.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_s, "
-    "r.pvalue AS pvalue_r, "
-    "strftime(r.ts, '%Y-%m-%d %H:%M:%S.%f') AS matched_ts "
-    "FROM l ASOF LEFT JOIN r "
-    "ON l.user_id = r.user_id AND l.ts >= r.ts")
-
-ORACLES["sessionize"] = (
-    "WITH o AS (SELECT event_id, user_id, ts, "
-    "  CASE WHEN lag(ts) OVER w IS NULL "
-    "       OR floor(epoch(ts))::BIGINT "
-    "          - floor(epoch(lag(ts) OVER w))::BIGINT > 1800 "
-    "  THEN 1 ELSE 0 END AS ns FROM events "
-    "  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)) "
-    "SELECT event_id, user_id, "
-    "CAST(sum(ns) OVER (PARTITION BY user_id ORDER BY ts, event_id "
-    "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx FROM o")
 
 # exact replay of the integer-lattice Lloyd iterations (see
 # operators/cluster.py): quantize -> (assign -> floor-mean update) x2
@@ -3872,58 +3580,6 @@ ORACLES["mixture_schedule"] = (
     "SELECT doc_id, CAST(topic AS BIGINT) AS topic, "
     "CAST(k AS BIGINT) AS k, "
     "CAST((k * 1000000000000) // wppm AS BIGINT) AS vt FROM k")
-
-ORACLES["events_pivot"] = (
-    "SELECT user_id, "
-    + ", ".join(
-        f"CAST(count(*) FILTER (event_type = '{t}') AS BIGINT) AS {t}"
-        for t in ["click", "view", "purchase", "signup", "error"])
-    + ", CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) "
-    "AS sum_cents FROM events GROUP BY user_id")
-
-ORACLES["events_setops"] = (
-    "WITH c AS (SELECT DISTINCT user_id FROM events "
-    "  WHERE event_type = 'click'), "
-    "b AS (SELECT DISTINCT user_id FROM events "
-    "  WHERE event_type = 'purchase') "
-    "SELECT user_id, 'click_only' AS op FROM "
-    "  (SELECT user_id FROM c EXCEPT SELECT user_id FROM b) "
-    "UNION ALL SELECT user_id, 'both' FROM "
-    "  (SELECT user_id FROM c INTERSECT SELECT user_id FROM b) "
-    "UNION ALL SELECT user_id, 'either' FROM "
-    "  (SELECT user_id FROM c UNION SELECT user_id FROM b)")
-
-# Spark grouping_id(): leftmost rollup column = most significant bit
-ORACLES["orders_rollup"] = (
-    "WITH j AS (SELECT c_mktsegment, o_orderpriority, "
-    "  CAST(round(o_totalprice * 100) AS BIGINT) AS cents "
-    "  FROM orders JOIN customer ON o_custkey = c_custkey) "
-    "SELECT c_mktsegment, o_orderpriority, "
-    "CAST(count(*) AS BIGINT) AS n_orders, "
-    "CAST(sum(cents) AS BIGINT) AS sum_cents, "
-    "CAST(GROUPING(c_mktsegment) * 2 + GROUPING(o_orderpriority) "
-    "  AS BIGINT) AS gid "
-    "FROM j GROUP BY ROLLUP(c_mktsegment, o_orderpriority)")
-
-# same join over the original parquet: bucketed co-location must be
-# value-invisible (the plan property is asserted inside the wrapper)
-ORACLES["bucketed_join"] = (
-    "SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders, "
-    "CAST(sum(o_orderkey) AS BIGINT) AS sum_okey "
-    "FROM orders JOIN customer ON o_custkey = c_custkey "
-    "GROUP BY c_mktsegment")
-
-ORACLES["events_rolling"] = (
-    "WITH t AS (SELECT event_id, user_id, "
-    "  CAST(floor(extract(epoch FROM ts)) AS BIGINT) AS sec, "
-    "  CAST(round(value * 100) AS BIGINT) AS cents FROM events) "
-    "SELECT event_id, user_id, sec, "
-    "CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY sec "
-    "  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS BIGINT) "
-    "  AS roll_cents, "
-    "CAST(count(*) OVER (PARTITION BY user_id ORDER BY sec "
-    "  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS BIGINT) "
-    "  AS roll_n FROM t")
 
 # arithmetic replay of synth_y4m_blob: every 2nd frame f of n=id%7+3,
 # Y-plane = first w*h of the frame bytes (id*11 + f*101 + j*7) % 256

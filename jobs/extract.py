@@ -6,7 +6,7 @@ Usage:
         --driver-class-path htmlparser_spark/jvm/htmlparser-localfs.jar \
         --jars htmlparser_spark/jvm/htmlparser-localfs.jar \
         --conf spark.hadoop.fs.file.impl=htmlparser_spark.jvm.NioLocalFileSystem \
-        --driver-java-options -XX:TieredStopAtLevel=1 \
+        --driver-java-options '-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m' \
         jobs/extract.py \
         --input /path/transcripts --output /path/out \
         --checkpoint /path/manifest [--format parquet|iceberg] \

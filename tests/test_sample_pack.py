@@ -308,6 +308,28 @@ def test_mixture_schedule_interleaves_by_weight(spark):
     assert a == sorted((r.doc_id, r.topic, r.k, r.vt) for r in out)
 
 
+def test_global_rank_equals_window_rank(spark):
+    from htmlparser_spark.operators.sample import global_rank
+    from pyspark.sql import Window
+    df = spark.range(0, 500).select(
+        (F.col("id") * 37 % 101).alias("a"), F.col("id").alias("b"))
+    exp = {(r.a, r.b): r.rk for r in
+           df.withColumn("rk", F.row_number().over(
+               Window.orderBy("a", "b"))).collect()}
+    for parts in (3, 16):
+        got = {(r.a, r.b): r.rank for r in
+               global_rank(df.repartition(7), ["a", "b"],
+                           num_partitions=parts).collect()}
+        assert got == exp
+    # no single-partition global window in the plan
+    out = global_rank(df, ["a", "b"], num_partitions=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for ln in plan.splitlines():
+        if "Window" in ln and "windowspecdefinition" in ln:
+            assert "_pid" in ln
+    assert "RangePartitioning" in plan or "rangepartitioning" in plan
+
+
 def test_readability_scores_hand_golden(spark):
     from htmlparser_spark.operators.text_stats import readability_scores
     from htmlparser_spark.plans import assert_no_python_row_udf

@@ -1,6 +1,6 @@
 """The session settings the spark-submit job and ``get_spark`` share,
 read off the configured builders; no Spark is started, except that the
-last test reads the shared test session's JVM."""
+JVM tests read the shared test session's JVM."""
 
 import importlib.util
 import zipfile
@@ -15,6 +15,8 @@ from htmlparser_spark.session import (DRIVER_JAVA_OPTIONS, LOCALFS_JAR,
                                       deploy_line, get_spark)
 
 ADAPTER = ("spark.hadoop.fs.file.impl", "spark.driver.extraClassPath")
+C1_ONLY = "-XX:TieredStopAtLevel=1"
+CODE_CACHE = "-XX:ReservedCodeCacheSize=240m"
 DAEMON = "spark.python.daemon.module"
 REPO = Path(__file__).resolve().parent.parent
 
@@ -98,7 +100,7 @@ def test_get_spark_launches_c1_only_jit(monkeypatch):
     seen = _capture(monkeypatch)
     with pytest.raises(_Built):
         get_spark(cores=2)
-    assert DRIVER_JAVA_OPTIONS == "-XX:TieredStopAtLevel=1"
+    assert C1_ONLY in DRIVER_JAVA_OPTIONS.split()
     assert seen["spark.driver.extraJavaOptions"] == DRIVER_JAVA_OPTIONS
     i = LOCAL_SUBMIT_ARGS.index("--driver-java-options")
     assert LOCAL_SUBMIT_ARGS[i + 1] == DRIVER_JAVA_OPTIONS
@@ -113,11 +115,36 @@ def test_job_session_sets_no_driver_java_options(monkeypatch, tmp_path):
         configure(SparkSession.builder)._options
 
 
+def _input_arguments(spark) -> list:
+    return list(spark._jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments())
+
+
 def test_shared_session_jvm_runs_c1_only_jit(spark):
     """The JVM get_spark launched was started with the flag."""
-    args = list(spark._jvm.java.lang.management.ManagementFactory
-                .getRuntimeMXBean().getInputArguments())
-    assert DRIVER_JAVA_OPTIONS in args, args
+    args = _input_arguments(spark)
+    assert C1_ONLY in args, args
+
+
+def test_driver_reserves_tiered_code_cache(monkeypatch, spark):
+    """With C1 alone the JVM reserves a 48 MB code cache, which a
+    long-lived session's compiled code keeps growing into, and a full
+    cache turns the compiler off.
+    Both launch paths ask for the tiered default's 240 MB, and the
+    shared session's JVM runs with it."""
+    seen = _capture(monkeypatch)
+    with pytest.raises(_Built):
+        get_spark(cores=2)
+    assert CODE_CACHE in seen["spark.driver.extraJavaOptions"].split()
+    _, args = deploy_line()
+    assert CODE_CACHE in args[args.index("--driver-java-options") + 1].split()
+    assert CODE_CACHE in _input_arguments(spark)
+    jvm = spark._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName(
+            "com.sun.management.HotSpotDiagnosticMXBean"))
+    assert bean.getVMOption("ReservedCodeCacheSize").getValue() == \
+        str(240 * 1024 * 1024)
 
 
 def test_daemon_shim_only_in_get_spark(monkeypatch, tmp_path):
@@ -148,7 +175,7 @@ def test_deploy_line_inert_without_archive(monkeypatch, tmp_path):
 def test_deploy_line_takes_an_existing_archive(monkeypatch, tmp_path):
     """Once an archive exists, the deploy line launches the driver the
     way it was dumped: the conf dir and jar copy of the cache, and the
-    archive flags after the JIT flag."""
+    archive flags after the JIT flags."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     if coldstart.keeps_conf_dir():
@@ -163,6 +190,8 @@ def test_deploy_line_takes_an_existing_archive(monkeypatch, tmp_path):
     assert copy.parent == tmp_path / "htmlparser_spark" / "jars"
     assert copy.read_bytes() == LOCALFS_JAR.read_bytes()
     opts = args[args.index("--driver-java-options") + 1].split()
-    assert opts[:3] == [DRIVER_JAVA_OPTIONS,
-                        f"-XX:SharedArchiveFile={archive}", "-Xshare:auto"]
-    assert all(o.startswith("-Xlog:cds") for o in opts[3:])
+    n = len(DRIVER_JAVA_OPTIONS.split())
+    assert opts[:n + 2] == [*DRIVER_JAVA_OPTIONS.split(),
+                            f"-XX:SharedArchiveFile={archive}",
+                            "-Xshare:auto"]
+    assert all(o.startswith("-Xlog:cds") for o in opts[n + 2:])
