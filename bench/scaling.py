@@ -158,11 +158,6 @@ def run_at(cores: int, input_path: Path, workdir: Path, tag: str = "",
         "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=16m",
         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=512",
         "--conf", "spark.sql.files.maxPartitionBytes=16m",
-        # 32 MB rowgroups: the 128 MB default made the bucket-write
-        # stage allocation-bound at 16 concurrent writers (26s wall at
-        # 16 cores vs 12s at 4 — NEGATIVE scaling, 53s task GC);
-        # smaller writer buffers restored write-stage scaling
-        "--conf", "spark.hadoop.parquet.block.size=33554432",
         "--conf", "spark.ui.enabled=false",
         # shuffle spill on tmpfs: executor-local scratch, like the
         # local NVMe each real executor would have (the sandbox's one

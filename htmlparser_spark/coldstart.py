@@ -185,20 +185,13 @@ def _driver_archive(jar: Path, build: bool):
     return str(copy), flags, {"SPARK_CONF_DIR": str(conf)}, tmp
 
 
-def _workers_import_package() -> bool:
-    """Local Python workers start in the driver's working directory
-    with the driver's ``PYTHONPATH``: the daemon module is importable
-    there only when the package root is one of them."""
-    root = Path(__file__).resolve().parent.parent
-    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
-    return any(p and Path(p).resolve() == root for p in paths)
-
-
 def _daemon_module() -> Optional[str]:
     """``pydaemon`` with its compiled zip built, or None (Spark's
-    daemon) when the workers could not import it."""
+    daemon) when Spark has no pyspark zip to compile. The workers
+    import the module from the package root ``get_spark`` puts on
+    their path."""
     spark_zip = spark_home() / "python" / "lib" / "pyspark.zip"
-    if not spark_zip.is_file() or not _workers_import_package():
+    if not spark_zip.is_file():
         return None
     dest = Path(pydaemon.compiled_zip(str(spark_zip)))
     if not pydaemon.usable(str(dest)):

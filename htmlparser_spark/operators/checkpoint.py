@@ -12,10 +12,10 @@ Mechanism (SURVEY §3.2 stage 2/6):
   integrity, and duplicated work is detectable, not just avoidable.
 - Resume reads the committed bucket ids from the manifest on the
   driver (pyarrow; the manifest is ≤ n_buckets rows per run) and drops
-  their rows with a plain IN-filter. Each manifest row records the
-  bucket count it was committed under, and a run under another count
-  raises before writing: the same ids would name other conversations.
-  The parse kernel is a pure
+  their rows with a plain IN-filter, built as one SQL predicate. Each
+  manifest row records the bucket count it was committed under, and a
+  run under another count raises before writing: the same ids would
+  name other conversations. The parse kernel is a pure
   function of `text`, so re-running a bucket is idempotent by
   construction; output is written with partitionBy(partition_id) +
   dynamic partition overwrite, making bucket-level retries
@@ -27,6 +27,8 @@ Mechanism (SURVEY §3.2 stage 2/6):
   file), and the certify re-read lists up to ``DRIVER_LISTING_MAX``
   bucket directories on the driver, a larger count on at most as many
   tasks.
+- Every bucket file is written with ``BUCKET_WRITE_OPTIONS``: zstd,
+  no dictionary, 32 MB row groups, whoever calls.
 """
 
 from __future__ import annotations
@@ -39,12 +41,12 @@ from typing import Optional
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = ["with_partition_id", "completed_ids", "lineage_rows",
            "append_manifest_rows", "cluster_buckets", "certify",
-           "run_checkpointed", "row_hash_expr"]
+           "run_checkpointed", "row_hash_expr", "BUCKET_WRITE_OPTIONS"]
 
 # n_buckets: the bucket count the row was committed under (null in
 # manifests written before it was recorded)
@@ -59,6 +61,17 @@ def with_partition_id(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "partition_id",
         F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("long"))
+
+
+def _bucket_in(ids) -> Column:
+    """``partition_id IN (ids)`` as one parsed SQL predicate.
+    ``Column.isin`` sends a py4j command per literal: over 4,000 ids
+    16,079 commands and 3.1 s on the driver, against 4 commands and
+    0.32 s for the parsed predicate (4-core VM)."""
+    if not ids:
+        return F.lit(False)
+    return F.expr("partition_id IN ({})".format(
+        ", ".join(str(int(i)) for i in ids)))
 
 
 def completed_ids(path: str, n_buckets: Optional[int] = None) \
@@ -182,6 +195,29 @@ def cluster_buckets(out: DataFrame, n_buckets: int, extra_cols=(),
     return out
 
 
+# The writer options of every bucket file, whoever calls run_checkpointed.
+# - zstd at parquet-mr's default level (Iceberg's default Parquet codec):
+#   raw_html and extracted_text, 86% of a chat_text bucket file, store
+#   about a third smaller than as snappy (stored bytes per input byte
+#   0.986 -> 0.670, seed 7).
+# - no dictionary: the text columns are unique strings, so parquet-mr
+#   built a dictionary per page, then fell back to plain, about 11% of
+#   the write's executor samples (Binary.hashCode,
+#   fallBackDictionaryEncodedData); the zstd write stage takes the CPU
+#   time of the snappy one (0.61 CPU-s).
+# - 32 MB row groups, not parquet-mr's 128 MB: with many concurrent
+#   writer tasks the row-group buffer drives the write stage's live
+#   memory, and at 128 MB 16 writers spent ~20% of pipeline wall in
+#   allocation and GC (26 s write stage at 16 cores against 12 s at 4,
+#   53 s task GC; BENCH/DIAGNOSIS_4_16.md); 32 MB keeps scans
+#   fine-grained at 100-TB scale too.
+BUCKET_WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.enable.dictionary": "false",
+    "parquet.block.size": str(32 * 1024 * 1024),
+}
+
+
 @contextmanager
 def _session_conf(spark: SparkSession, settings: dict):
     """Session conf ``settings`` (keys Spark defines, so each has a
@@ -228,7 +264,7 @@ def certify(spark: SparkSession, output_path: str, schema, run_id: str,
         written = written.select("partition_id", "conv_id", "turn_idx",
                                  *extra_cols, "extracted_text")
     if skip:
-        written = written.filter(~F.col("partition_id").isin(list(skip)))
+        written = written.filter(~_bucket_in(skip))
     return lineage_rows(written, run_id,
                         from_hash_col=lineage_mode == "hash_col",
                         extra_cols=extra_cols).collect()
@@ -244,6 +280,11 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
                      extra_hash_cols: tuple = ()) -> list:
     """Full checkpointed pipeline: bucket → resume-filter → extract →
     write(partitionBy bucket, dynamic overwrite) → lineage append.
+    Every bucket file is Parquet with ``BUCKET_WRITE_OPTIONS`` (zstd,
+    plain encoding, 32 MB row groups), whatever the session's or the
+    Hadoop conf's Parquet settings; files other writers left in a
+    committed bucket are only ever skipped, so a resume over snappy
+    buckets of an older run is sound.
     Returns the lineage rows of THIS run as a driver-side list of Rows
     (partition_id, n_rows, content_hash, run_id); empty if nothing to
     do. The list is bounded by n_buckets, so driver-side is safe.
@@ -304,13 +345,13 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     if done:
         # resume: committed buckets are a small driver-side list
         # (≤ n_buckets) → plain IN-filter, no join, no extra scan
-        todo = bucketed.filter(~F.col("partition_id").isin(done))
+        todo = bucketed.filter(~_bucket_in(done))
         if len(done) >= n_buckets:
             return []
     if max_buckets is not None:
         skip = set(done or ())
         undone = [b for b in range(n_buckets) if b not in skip][:max_buckets]
-        todo = todo.filter(F.col("partition_id").isin(undone))
+        todo = todo.filter(_bucket_in(undone))
     out = (transform(todo) if transform is not None
            else extract_transcripts(todo, **ek))
     # cluster by bucket before the partitioned write: file count
@@ -324,7 +365,7 @@ def run_checkpointed(spark: SparkSession, df: DataFrame, output_path: str,
     if lineage_mode == "hash_col":
         out = out.withColumn(ROW_HASH_COL, row_hash_expr(extra_hash_cols))
     out.write.mode("overwrite").partitionBy("partition_id") \
-        .parquet(output_path)
+        .options(**BUCKET_WRITE_OPTIONS).parquet(output_path)
     rows = certify(spark, output_path, out.schema, run_id,
                    skip=done or (), lineage_mode=lineage_mode,
                    extra_cols=extra_hash_cols)

@@ -29,6 +29,12 @@ Settings rationale (targets a multi-executor cluster; local[N] here):
   keeps growing (43 MB after 30 ``chat_text`` jobs on a 4-core VM), and
   a full cache turns the compiler off, so the same options reserve the
   tiered default's 240 MB.
+- the Python workers import the package from where the driver did:
+  ``get_spark`` puts the package root on ``spark.executorEnv.PYTHONPATH``,
+  which Spark adds to the daemon's and workers' ``PYTHONPATH``, so a
+  driver needs neither the checkout as its working directory nor
+  ``PYTHONPATH`` (a worker that cannot import the package fails every
+  package UDF with ``ModuleNotFoundError``).
 - cold start (``coldstart``): ``get_spark`` launches its JVM with a
   cached class-data archive and names ``pydaemon`` as the Python daemon,
   which imports pyspark from a cached bytecode copy; both caches build
@@ -41,7 +47,8 @@ Settings rationale (targets a multi-executor cluster; local[N] here):
 
 ``configure`` holds the settings the spark-submit job and ``get_spark``
 share; ``get_spark`` adds the local master, its sizing, the adapter,
-the driver's JIT flags and the cold-start caches.
+the driver's JIT flags, the workers' import path and the cold-start
+caches.
 """
 
 from __future__ import annotations
@@ -59,6 +66,8 @@ __all__ = ["get_spark", "configure", "default_parallelism", "LOCALFS_JAR",
            "deploy_line"]
 
 LOCALFS_JAR = Path(__file__).resolve().parent / "jvm" / "htmlparser-localfs.jar"
+# the directory the package is imported from, for the Python workers
+PACKAGE_ROOT = Path(__file__).resolve().parent.parent
 LOCALFS_CLASS = "htmlparser_spark.jvm.NioLocalFileSystem"
 # C1-only JIT for the driver JVM, with the tiered default's code cache
 # (see the module docstring)
@@ -110,6 +119,7 @@ def get_spark(app: str = "htmlparser_spark", cores: int | None = None,
         .config("spark.hadoop.fs.file.impl", LOCALFS_CLASS)
         .config("spark.driver.extraClassPath", launch.class_path)
         .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
+        .config("spark.executorEnv.PYTHONPATH", str(PACKAGE_ROOT))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

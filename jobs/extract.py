@@ -23,7 +23,9 @@ runs salted-repartition → fused parse/extract kernel → stable turn
 ordering, writes bucket-partitioned output plus per-bucket lineage
 (partition_id, n_rows, content_hash) to the checkpoint manifest, and
 resumes idempotently: re-running after a partial failure re-processes
-only uncommitted buckets.
+only uncommitted buckets. Each bucket is one Parquet file, zstd with
+no dictionary and 32 MB row groups (``run_checkpointed`` sets them;
+Parquet confs passed to spark-submit do not change them).
 
 ``--mode`` swaps the per-turn extraction while keeping every other
 stage (bucketing, resume, clustered write, lineage certify) the same:
@@ -186,15 +188,6 @@ def main(argv=None) -> int:
     spark = configure(SparkSession.builder.appName("htmlparser-extract")) \
         .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # 32 MB parquet rowgroups (vs the 128 MB default) unless the
-    # submitter set their own: with many concurrent writer tasks the
-    # rowgroup buffer is the write stage's live-memory driver, and the
-    # measured 16-writer allocation/GC storm at 128 MB cost ~20% of
-    # pipeline wall (BENCH/BASELINE.md). 32 MB keeps scan parallelism
-    # fine-grained at 100-TB scale too.
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    if hconf.get("parquet.block.size") is None:
-        hconf.setInt("parquet.block.size", 33554432)
     run_id = args.run_id or f"run-{int(time.time())}"
     if args.no_resume:
         import shutil

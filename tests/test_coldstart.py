@@ -33,16 +33,20 @@ if coldstart.keeps_conf_dir():
                 "setting: no archive is used", allow_module_level=True)
 
 
-def _session(cache, *flags, checkout=REPO, log=None, **env) -> dict:
-    """Run one session over ``cache`` from ``checkout``; its result."""
-    env = dict(os.environ, XDG_CACHE_HOME=str(cache),
-               SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=str(checkout), **env)
+def _session(cache, *flags, checkout=REPO, cwd=None, log=None,
+             **env) -> dict:
+    """Run one session over ``cache`` from ``checkout``, in ``cwd``
+    (default: the checkout); its result. An ``env`` value of None
+    unsets the variable."""
+    env = {**os.environ, "XDG_CACHE_HOME": str(cache),
+           "SPARK_GRAFT_DRIVER_MEM": "1g", "PYTHONPATH": str(checkout), **env}
+    env = {k: v for k, v in env.items() if v is not None}
     if log is not None:
         env["SPARK_SUBMIT_OPTS"] = " ".join(filter(None, (
             env.get("SPARK_SUBMIT_OPTS"),
             f"-Xlog:cds=info,class+load=info:file={log}")))
-    proc = subprocess.run([sys.executable, str(HARNESS), *flags],
-                          cwd=checkout, env=env, capture_output=True,
+    proc = subprocess.run([sys.executable, str(checkout / HARNESS), *flags],
+                          cwd=cwd or checkout, env=env, capture_output=True,
                           text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-3000:]
     for stream in (proc.stdout, proc.stderr):
@@ -152,6 +156,16 @@ def test_two_checkouts_share_one_archive(cache, tmp_path):
     assert _archives(cache) == [archive]
 
 
+def test_session_outside_the_checkout(cache, tmp_path):
+    """A driver run from a working directory outside the checkout, with
+    no PYTHONPATH: its workers still import the package (the kernel
+    rows come back), and its daemon is the compiled-pyspark one."""
+    out = _session(cache, cwd=tmp_path, PYTHONPATH=None)
+    assert out["checkout"] == str(REPO)
+    assert out["daemon"] == pydaemon.__name__
+    assert out["pyspark"].startswith(str(cache))
+
+
 def test_missing_compiled_zip_falls_back(cache):
     out = _session(cache, "--drop-pyzip")
     assert out["pyspark"].startswith(_spark_zip())
@@ -164,7 +178,6 @@ def test_foreign_compiled_zip_falls_back(cache, monkeypatch):
     out = _session(cache, "--foreign-pyzip")
     assert out["pyspark"].startswith(_spark_zip())
     monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
-    monkeypatch.chdir(REPO)
     path = pydaemon.compiled_zip(_spark_zip())
     assert path.startswith(str(cache)) and not pydaemon.usable(path)
     assert coldstart.plan(LOCALFS_JAR).daemon_module == pydaemon.__name__

@@ -2,9 +2,12 @@
 ``get_spark``, optionally spoil the compiled pyspark zip before the
 first Python job starts the daemon, run the text kernel over a fixed
 set of documents, and print one JSON line: the rows, the file the
-workers imported pyspark from, and the JVM's archive flags.
+workers imported pyspark from, the daemon module, the JVM's archive
+flags and the checkout the package came from.
 
-Usage: python cold_session.py [--drop-pyzip | --foreign-pyzip]
+Usage: python <checkout>/tests/tools/cold_session.py
+           [--drop-pyzip | --foreign-pyzip]
+Runs the package of the checkout it lies in, from any working directory.
 """
 
 import json
@@ -12,7 +15,7 @@ import os
 import sys
 from pathlib import Path
 
-sys.path.insert(0, os.getcwd())
+sys.path.insert(0, str(Path(__file__).parents[2]))
 
 DOCS = ["<div id=x><p>hi</p><script>junk</script></div>",
         "<p>café &amp; <b>bold</b><br>line</p>",
@@ -64,14 +67,18 @@ def main(argv) -> None:
     # set only by a spark-defaults.conf in a conf dir the test provides
     conf_probe = spark.sparkContext.getConf().get("spark.coldstart.probe",
                                                   None)
+    daemon = spark.sparkContext.getConf().get("spark.python.daemon.module",
+                                              None)
     spark.stop()
+    import htmlparser_spark
     print(json.dumps({
         "rows": [list(r) for r in rows],
         "pyspark": pyspark_file,
+        "daemon": daemon,
         "archive_flags": [a for a in args if "Archive" in a or "Xshare" in a],
         "class_path_jar": class_path.split(os.pathsep)[0],
         "conf_probe": conf_probe,
-        "checkout": str(Path.cwd())}))
+        "checkout": str(Path(htmlparser_spark.__file__).parent.parent)}))
 
 
 if __name__ == "__main__":
