@@ -2,22 +2,24 @@
 """A/B of two checkouts on the repository's benchmark, in alternating pairs.
 
     python bench/ab.py --base ../parent --change . --pairs 10 \
-        [--workloads chat_text agent_links_resume] [--seed 1000] \
-        [--seconds 3] [--trace 0] [--out ab.jsonl]
+        [--seed 1000] [--trace 0] [--out ab.jsonl]
     python bench/ab.py --summary ab.jsonl
 
 Pair ``i`` runs ``perfbench/run.py`` of each checkout, unchanged and from
 that checkout's root, once per workload on seed ``--seed + i``: the base
-first in even pairs, the change first in odd ones. Every run's result
-line is appended to ``--out`` as it lands, so an interrupted A/B keeps
-its runs, and ``--summary`` prints the table of a file of runs again.
+first in even pairs, the change first in odd ones. The workloads and the
+run length are the ones the BENCHMARK.json of this script's checkout
+fixes. Every run's result line is appended to ``--out`` as it lands, so
+an interrupted A/B keeps its runs, and ``--summary`` prints the table of
+a file of runs again.
 
 The table has one row per workload and metric: each side's median and
-quartiles over all its runs, the pairs the change won and lost (ties
-count for neither; "better" is the metric's direction in the
-BENCHMARK.json of this script's checkout), and each side's failed
-operations, plus its runs that ended without a result. ``--help`` starts
-nothing.
+quartiles over its runs, the pairs the change won and lost (ties count
+for neither; "better" is the metric's direction in BENCHMARK.json), and
+each side's failed operations, runs that failed the output gate
+(``correct`` false) and runs that ended without a result. A run that
+failed the gate or ended without a result counts in no median and no
+pair. ``--help`` starts nothing.
 """
 
 from __future__ import annotations
@@ -34,49 +36,59 @@ ROOT = Path(__file__).resolve().parent.parent
 
 
 def quartiles(values: list) -> tuple:
-    """(q1, median, q3); one value is all three."""
+    """(q1, median, q3), by the method of ``perfbench/record.py``'s
+    spread; one value is all three."""
     if len(values) < 2:
         return (values[0],) * 3
-    q1, med, q3 = statistics.quantiles(values, n=4, method="inclusive")
+    q1, med, q3 = statistics.quantiles(values, n=4)
     return q1, med, q3
 
 
 def summarize(runs: list, better: dict) -> list:
     """One row per (workload, metric) from result records
-    ``{"workload", "pair", "side", "failed", "metrics": {name: value}}``:
-    each side's quartiles, the pairs the change won and lost, and each
-    side's failed count. ``better`` maps a metric to "higher" or
-    "lower"; a metric without it counts no pairs."""
+    ``{"workload", "pair", "seed", "side", "failed", "correct",
+    "metrics": {name: value}}``: each side's quartiles, the pairs the
+    change won and lost, and each side's failed operations, incorrect
+    runs and runs without a result (``failed`` None). ``better`` maps a
+    metric to "higher" or "lower"; a metric without it counts no pairs.
+    Raises ValueError on two runs of one side, workload, pair and
+    seed."""
     by = {}
     for r in runs:
-        by.setdefault(r["workload"], {}).setdefault(r["pair"], {})[
-            r["side"]] = r
+        pair = by.setdefault(r["workload"], {}).setdefault(
+            (r["pair"], r["seed"]), {})
+        if r["side"] in pair:
+            raise ValueError(
+                f"two {r['side']} runs of {r['workload']} in pair "
+                f"{r['pair']}, seed {r['seed']}")
+        pair[r["side"]] = r
     rows = []
     for workload, pairs in by.items():
-        names = sorted({m for p in pairs.values() for r in p.values()
+        ok = [{s: r for s, r in p.items()
+               if r["failed"] is not None and r["correct"]}
+              for p in pairs.values()]
+        names = sorted({m for p in ok for r in p.values()
                         for m in r["metrics"]})
         for name in names:
-            vals = {s: [p[s]["metrics"][name] for p in pairs.values()
-                        if s in p and name in p[s]["metrics"]]
-                    for s in SIDES}
-            won = lost = 0
             sign = {"higher": 1, "lower": -1}.get(better.get(name), 0)
-            for p in pairs.values():
-                if sign and all(s in p and name in p[s]["metrics"]
-                                for s in SIDES):
-                    d = sign * (p["change"]["metrics"][name]
-                                - p["base"]["metrics"][name])
-                    won += d > 0
-                    lost += d < 0
+            both = [p for p in ok
+                    if all(s in p and name in p[s]["metrics"]
+                           for s in SIDES)]
+            diffs = [sign * (p["change"]["metrics"][name]
+                             - p["base"]["metrics"][name]) for p in both]
             row = {"workload": workload, "metric": name,
-                   "pairs": sum(all(s in p for s in SIDES)
-                                for p in pairs.values()),
-                   "won": won, "lost": lost}
+                   "pairs": len(both),
+                   "won": sum(d > 0 for d in diffs),
+                   "lost": sum(d < 0 for d in diffs)}
             for s in SIDES:
+                vals = [p[s]["metrics"][name] for p in ok
+                        if s in p and name in p[s]["metrics"]]
                 mine = [p[s] for p in pairs.values() if s in p]
-                row[s] = quartiles(vals[s]) if vals[s] else None
-                # a run that exited without a result line: failed None
+                row[s] = quartiles(vals) if vals else None
                 row[f"{s}_failed"] = sum(r["failed"] or 0 for r in mine)
+                row[f"{s}_incorrect"] = sum(
+                    r["failed"] is not None and not r["correct"]
+                    for r in mine)
                 row[f"{s}_errors"] = sum(r["failed"] is None for r in mine)
             rows.append(row)
     return rows
@@ -87,24 +99,27 @@ def format_rows(rows: list) -> str:
         return "-" if v is None else \
             f"{v[1]:.6g} [{v[0]:.6g}, {v[2]:.6g}]"
     head = ("workload", "metric", "base median [q1, q3]",
-            "change median [q1, q3]", "won/lost of pairs", "failed b/c")
+            "change median [q1, q3]", "won/lost of pairs",
+            "failed,incorrect,errors b|c")
     lines = ["\t".join(head)]
     for r in rows:
         lines.append("\t".join((
             r["workload"], r["metric"], q(r["base"]), q(r["change"]),
             f"{r['won']}/{r['lost']} of {r['pairs']}",
-            "/".join(f"{r[s + '_failed']}"
-                     + (f"+{r[s + '_errors']} errors"
-                        if r[s + "_errors"] else "") for s in SIDES))))
+            "|".join(f"{r[s + '_failed']},{r[s + '_incorrect']},"
+                     f"{r[s + '_errors']}" for s in SIDES))))
     return "\n".join(lines)
 
 
-def directions() -> dict:
-    """Each metric's "better" direction, from this checkout's
-    BENCHMARK.json."""
-    spec = json.loads((ROOT / "BENCHMARK.json").read_text())
+def benchmark() -> dict:
+    """This checkout's BENCHMARK.json."""
+    return json.loads((ROOT / "BENCHMARK.json").read_text())
+
+
+def directions(spec: dict) -> dict:
+    """Each metric's "better" direction."""
     return {m["name"]: m["better"]
-            for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
+            for m in spec["end_to_end"] + spec["per_layer"]}
 
 
 def run_one(checkout: Path, workload: str, seed: int, seconds: float,
@@ -116,7 +131,8 @@ def run_one(checkout: Path, workload: str, seed: int, seconds: float,
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         text=True)
     if proc.returncode != 0 or not proc.stdout.strip():
-        return {"failed": None, "metrics": {}, "error": proc.returncode}
+        return {"failed": None, "correct": False, "metrics": {},
+                "error": proc.returncode}
     line = json.loads(proc.stdout.strip().splitlines()[-1])
     return {"failed": line["failed"], "correct": line["correct"],
             "metrics": {k: v["value"] for k, v in line["metrics"].items()}}
@@ -133,19 +149,17 @@ def main(argv=None) -> int:
     ap.add_argument("--base", type=Path, help="parent checkout")
     ap.add_argument("--change", type=Path, help="changed checkout")
     ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--workloads", nargs="+",
-                    default=["chat_text", "agent_links_resume"])
     ap.add_argument("--seed", type=int, default=1000,
                     help="seed of pair 0; pair i runs seed + i")
-    ap.add_argument("--seconds", type=float, default=3)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", type=Path, help="JSON lines of every run")
     ap.add_argument("--summary", type=Path,
                     help="print the table of a file of runs and exit")
     args = ap.parse_args(argv)
+    spec = benchmark()
     if args.summary:
         print(format_rows(summarize(read_runs(args.summary),
-                                    directions())))
+                                    directions(spec))))
         return 0
     if args.base is None or args.change is None:
         ap.error("--base and --change are required")
@@ -154,10 +168,10 @@ def main(argv=None) -> int:
     runs = []
     for i in range(args.pairs):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
-        for workload in args.workloads:
+        for workload in (w["name"] for w in spec["workloads"]):
             for side in order:
                 r = run_one(checkouts[side], workload, args.seed + i,
-                            args.seconds, args.trace)
+                            spec["run_seconds"], args.trace)
                 r.update(workload=workload, pair=i, side=side,
                          seed=args.seed + i)
                 runs.append(r)
@@ -165,7 +179,7 @@ def main(argv=None) -> int:
                     with open(args.out, "a") as f:
                         f.write(json.dumps(r) + "\n")
                 print(json.dumps(r), file=sys.stderr, flush=True)
-    print(format_rows(summarize(runs, directions())))
+    print(format_rows(summarize(runs, directions(spec))))
     return 0
 
 
